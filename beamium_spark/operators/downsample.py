@@ -47,7 +47,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from beamium_spark.operators.rollup import window_seconds
+from beamium_spark.operators.rollup import window_start
 
 M4_COLS = (
     "t_first", "v_first", "t_min", "v_min",
@@ -68,8 +68,7 @@ def m4_downsample(
     timestamps).  Single hash-agg; see module docstring for the
     determinism contract.
     """
-    w = window_seconds(window)
-    ws = (F.floor(F.unix_timestamp(F.col(ts_col)) / w) * w).cast("long")
+    ws = F.unix_seconds(window_start(F.col(ts_col), window))
     t = F.unix_micros(F.col(ts_col))
     v = F.col(val_col).cast("double")
     by_t = F.struct(t.alias("t"), v.alias("v"))

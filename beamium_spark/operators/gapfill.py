@@ -24,9 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_WINDOW_SECONDS = {"1 minute": 60, "1 hour": 3600, "1 day": 86400}
-
-
 def gapfill(
     tier: DataFrame,
     window: str = "1 minute",

@@ -43,6 +43,10 @@ def window_start(ts, window: str):
     """Tumbling-window start: bit-identical to ``F.window(ts, window).start``
     (epoch-aligned floor, pmod handles pre-epoch timestamps exactly like
     TimeWindow's CASE arm) but as ONE integer expression on an 8-byte key.
+    This is the engine's only batch window key: the rollups, the cascades,
+    ``query()``'s re-rolls and M4's pixel columns all align through it.
+    ``ts`` must be a TIMESTAMP; the job reads its source with a declared
+    schema, so no TIMESTAMP_NTZ column reaches it.
 
     ``F.window`` costs more than its struct: Catalyst's TimeWindow rewrite
     appends an ``isnotnull(<full window expr>)`` filter that gets pushed to
@@ -51,8 +55,8 @@ def window_start(ts, window: str):
     cascades), and the (start, end) struct doubles the group key width while
     ``end`` is computed and shuffled but never read. Callers pair this with
     an explicit ``isnotnull(ts)`` filter, preserving F.window's null-row
-    semantics. Batch only — streaming keeps ``F.window`` (watermark state
-    is keyed on the window column)."""
+    semantics. Streaming keeps ``F.window``: watermark state must be keyed
+    on the window column."""
     dur_us = window_seconds(window) * 1_000_000
     us = F.unix_micros(ts if isinstance(ts, Column) else F.col(ts))
     return F.timestamp_micros(us - F.pmod(us, F.lit(dur_us)))

@@ -31,6 +31,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from beamium_spark.operators.blocks import encode_blocks
 from beamium_spark.operators.extract import extract_points
@@ -38,6 +39,20 @@ from beamium_spark.operators.retention import size_cap_evict, ttl_evict
 from beamium_spark.operators.rollup import rollup_cascade, rollup_tier, rollup_tier_salted
 from beamium_spark.plans.checkpoint import Manifest, commit_with_retry, new_run_id
 from beamium_spark.sources.tables import ParquetTierStore
+
+#: the pages source schema. Declared rather than inferred so ``warc_ts``
+#: reads as TIMESTAMP whatever the session's NTZ inference says: parquet
+#: written with naive timestamps would otherwise read as TIMESTAMP_NTZ,
+#: which the window key rejects. The microsecond values are unchanged.
+PAGES_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType(), True),
+        T.StructField("warc_ts", T.TimestampType(), True),
+        T.StructField("html", T.BinaryType(), True),
+        T.StructField("text", T.StringType(), True),
+        T.StructField("lang", T.StringType(), True),
+    ]
+)
 
 
 @dataclass
@@ -130,21 +145,17 @@ class RollupJob:
 
     # ---- discovery -------------------------------------------------------
 
-    def source_chunks(self) -> DataFrame:
-        pages = self.spark.read.parquet(self.pages_path)
-        return (
-            pages.select(F.date_trunc("hour", "warc_ts").alias("chunk_start"))
-            .distinct()
-        )
+    def pages(self) -> DataFrame:
+        """The source pages: every read of the source goes through here."""
+        return self.spark.read.schema(PAGES_SCHEMA).parquet(self.pages_path)
 
     def source_chunk_counts(self) -> DataFrame:
         """(chunk_start, n_pages) over the source — the late-data detector's
         ground truth. Reads the warc_ts column only (column-pruned scan);
         the aggregate is the same O(chunks)-row frame discovery already
         produces."""
-        pages = self.spark.read.parquet(self.pages_path)
         return (
-            pages.filter(F.col("warc_ts").isNotNull())
+            self.pages().filter(F.col("warc_ts").isNotNull())
             .groupBy(F.date_trunc("hour", "warc_ts").alias("chunk_start"))
             .agg(F.count("*").alias("n_pages"))
         )
@@ -202,13 +213,15 @@ class RollupJob:
         self.manifest.record_event(run_id, "run_start", f"chunks={len(pending)}")
 
         lo, hi = min(pending), max(pending)
-        pages = self.spark.read.parquet(self.pages_path).filter(
-            # range + set predicate: range reaches row-group stats, the
-            # isin prunes interior committed chunks
+        # range + set predicate: range reaches row-group stats, the isin
+        # prunes interior committed chunks
+        in_pending = (
             (F.col("warc_ts") >= F.lit(lo))
             & (F.col("warc_ts") < F.lit(hi) + F.expr("interval 1 hour"))
             & F.date_trunc("hour", "warc_ts").isin(pending)
         )
+        source = self.pages()
+        pages = source.filter(in_pending)
         points = extract_points(
             pages,
             n_buckets=self.conf.n_buckets,
@@ -229,14 +242,7 @@ class RollupJob:
         # pending work.
         from beamium_spark.operators.extract import METRICS
 
-        count_src = self.spark.read.parquet(self.pages_path).filter(
-            F.col("warc_ts").isNull()
-            | (
-                (F.col("warc_ts") >= F.lit(lo))
-                & (F.col("warc_ts") < F.lit(hi) + F.expr("interval 1 hour"))
-                & F.date_trunc("hour", "warc_ts").isin(pending)
-            )
-        )
+        count_src = source.filter(F.col("warc_ts").isNull() | in_pending)
         pg = count_src.agg(
             F.count(F.lit(1)).alias("scraped"),
             F.count(

@@ -40,18 +40,25 @@ import datetime as dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from beamium_spark.operators.rollup import (
+    histogram_quantile,
+    session_rollup,
+    tier_alert_rule,
+    tier_anomalies,
+    tier_decompose,
+    tier_ewma,
+    window_seconds,
+    window_start,
+)
+
 _TIER_SECONDS = (("rollup_1d", 86400), ("rollup_1h", 3600), ("rollup_1m", 60))
 
-_STEP_SECONDS = {"1 minute": 60, "1 hour": 3600, "1 day": 86400}
+_AGGS = ("avg", "sum", "min", "max", "cnt")
 
 
 def parse_step(step: str | int) -> int:
     if isinstance(step, int):
         return step
-    if step in _STEP_SECONDS:
-        return _STEP_SECONDS[step]
-    from beamium_spark.operators.rollup import window_seconds
-
     try:
         return window_seconds(step)  # Spark interval form ('10 minutes')
     except ValueError:
@@ -70,6 +77,33 @@ def select_tier(store, step_seconds: int) -> tuple[str, int]:
     raise ValueError("no stored tier divides the requested step")
 
 
+def _in_range(df: DataFrame, start, end, ts_col: str) -> DataFrame:
+    """Rows of ``df`` with ``ts_col`` in [start, end)."""
+    return df.filter((F.col(ts_col) >= F.lit(start)) & (F.col(ts_col) < F.lit(end)))
+
+
+def _read_range(
+    store, table: str, start, end, metric: str | None = None,
+    bucket: int | None = None, ts_col: str | None = "window_start",
+) -> DataFrame:
+    """``table`` pruned to [start, end) and, when given, to the anchored
+    ``metric`` regex and ``bucket``. chunk_key strings (yyyy-MM-dd-HH)
+    order like their hours, so the range on the PARTITION column prunes
+    file listing; ``ts_col`` then trims inside the edge chunks (None for
+    tables without a row timestamp, such as the block store)."""
+    df = store.read(table)
+    if "chunk_key" in df.columns:
+        lo, hi = (t.strftime("%Y-%m-%d-%H") for t in (start, end))
+        df = df.filter(F.col("chunk_key").between(lo, hi))
+    if ts_col is not None:
+        df = _in_range(df, start, end, ts_col)
+    if metric is not None:
+        df = df.filter(F.col("metric").rlike(f"^(?:{metric})$"))
+    if bucket is not None:
+        df = df.filter(F.col("bucket") == bucket)
+    return df
+
+
 def _blocks_points(
     store, blocks_table: str, metric: str, start, end, bucket: int | None
 ) -> DataFrame:
@@ -84,17 +118,8 @@ def _blocks_points(
         )
     from beamium_spark.operators.blocks import decode_blocks
 
-    b = store.read(blocks_table)
-    if "chunk_key" in b.columns:
-        lo = start.strftime("%Y-%m-%d-%H")
-        hi = end.strftime("%Y-%m-%d-%H")
-        b = b.filter((F.col("chunk_key") >= lo) & (F.col("chunk_key") <= hi))
-    b = b.filter(F.col("metric").rlike(f"^(?:{metric})$"))
-    if bucket is not None:
-        b = b.filter(F.col("bucket") == bucket)
-    return decode_blocks(b).filter(
-        (F.col("ts") >= F.lit(start)) & (F.col("ts") < F.lit(end))
-    )
+    b = _read_range(store, blocks_table, start, end, metric, bucket, ts_col=None)
+    return _in_range(decode_blocks(b), start, end, "ts")
 
 
 def query(
@@ -130,6 +155,12 @@ def query(
     True for per-second delta of ``value``, ``'counter'`` for
     counter-reset semantics (negative delta → the new value is the
     increase). ``smooth`` and ``rate`` are mutually exclusive.
+
+    ``value`` on the rows ``fill`` adds (``filled`` is true), per
+    strategy: ``zero`` emits 0.0 for every ``agg``; ``linear``
+    interpolates ``sum`` between the observed neighbours, ``cnt`` is 0
+    and ``avg``/``min``/``max`` are NULL; ``ffill`` emits the carried
+    tuple's value (NULL before the first observation).
 
     ``stat='pNN[.N]'`` (e.g. 'p95') switches the value to an exact
     interpolated percentile recomputed from the raw-fidelity block store
@@ -221,7 +252,10 @@ def query(
         start = dt.datetime.fromisoformat(start)
     if isinstance(end, str):
         end = dt.datetime.fromisoformat(end)
+    if agg not in _AGGS:
+        raise ValueError(f"agg must be one of {_AGGS}, got {agg!r}")
     step_s = parse_step(step)
+    step_w = f"{step_s} seconds"
 
     if render is not None:
         if render != "m4":
@@ -244,7 +278,7 @@ def query(
         from beamium_spark.operators.downsample import m4_downsample
 
         pts = _blocks_points(store, blocks_table, metric, start, end, bucket)
-        return m4_downsample(pts, window=f"{step_s} seconds")
+        return m4_downsample(pts, window=step_w)
 
     if session_gap is not None:
         if stat is not None or fill is not None or smooth is not None or rate \
@@ -254,8 +288,6 @@ def query(
                 "session_gap is exclusive with stat/fill/smooth/rate/"
                 "anomaly/ewma/decompose/alert"
             )
-        from beamium_spark.operators.rollup import session_rollup
-
         pts = _blocks_points(store, blocks_table, metric, start, end, bucket)
         return session_rollup(pts, gap=session_gap)
 
@@ -272,23 +304,14 @@ def query(
                 "distinct reads union the 1h sketch tier — step must be "
                 "a multiple of 1 hour"
             )
-        d = store.read("distinct_1h")
-        if "chunk_key" in d.columns:
-            lo = start.strftime("%Y-%m-%d-%H")
-            hi = end.strftime("%Y-%m-%d-%H")
-            d = d.filter((F.col("chunk_key") >= lo) & (F.col("chunk_key") <= hi))
-        d = d.filter(
-            (F.col("window_start") >= F.lit(start))
-            & (F.col("window_start") < F.lit(end))
-        )
-        w = F.window("window_start", f"{step_s} seconds")
+        d = _read_range(store, "distinct_1h", start, end)
         out = (
-            d.groupBy(w.alias("w"))
+            d.groupBy(window_start("window_start", step_w).alias("window_start"))
             .agg(F.hll_union_agg("sk").alias("sk"))
             .select(
                 F.lit(0).alias("bucket"),
                 F.lit("distinct_urls").alias("metric"),
-                F.col("w.start").alias("window_start"),
+                "window_start",
                 F.hll_sketch_estimate("sk").cast("double").alias("value"),
             )
         )
@@ -315,30 +338,17 @@ def query(
                     "approx stat read needs the 'hist_1h' tier "
                     "(set JobConf.histogram_bin_width)"
                 )
-            from beamium_spark.operators.rollup import histogram_quantile
-
-            h = store.read("hist_1h")
-            if "chunk_key" in h.columns:
-                lo = start.strftime("%Y-%m-%d-%H")
-                hi = end.strftime("%Y-%m-%d-%H")
-                h = h.filter((F.col("chunk_key") >= lo) & (F.col("chunk_key") <= hi))
-            h = h.filter(
-                (F.col("window_start") >= F.lit(start))
-                & (F.col("window_start") < F.lit(end))
-            ).filter(F.col("metric").rlike(f"^(?:{metric})$"))
-            if bucket is not None:
-                h = h.filter(F.col("bucket") == bucket)
+            h = _read_range(store, "hist_1h", start, end, metric, bucket)
             # self-describing width (control-plane single-row read)
             wrow = h.select("bin_width").first()
             width = float(wrow[0]) if wrow else 1.0
-            w = F.window("window_start", f"{step_s} seconds")
             re_binned = (
-                h.groupBy("bucket", "metric", w.alias("w"), "bin", "bin_lo")
-                .agg(F.sum("cnt").alias("cnt"))
-                .select(
-                    "bucket", "metric", F.col("w.start").alias("window_start"),
-                    "bin", "bin_lo", "cnt",
+                h.groupBy(
+                    "bucket", "metric",
+                    window_start("window_start", step_w).alias("window_start"),
+                    "bin", "bin_lo",
                 )
+                .agg(F.sum("cnt").alias("cnt"))
             )
             out = histogram_quantile(re_binned, qfrac, width)
             return _shape(out, smooth, rate, step_s, anomaly,
@@ -346,11 +356,8 @@ def query(
                           alert_op, alert_for)
         pts = _blocks_points(store, blocks_table, metric, start, end, bucket)
         out = (
-            pts.groupBy("bucket", "metric", F.window("ts", f"{step_s} seconds").alias("w"))
+            pts.groupBy("bucket", "metric", window_start("ts", step_w).alias("window_start"))
             .agg(F.expr(f"percentile(value, {qfrac!r})").alias("value"))
-            .select(
-                "bucket", "metric", F.col("w.start").alias("window_start"), "value"
-            )
         )
         return _shape(out, smooth, rate, step_s, anomaly,
                       anomaly_threshold, ewma, decompose, alert,
@@ -358,53 +365,38 @@ def query(
 
     tier_name, _tier_s = select_tier(store, step_s)
 
-    t = store.read(tier_name)
-    if "chunk_key" in t.columns:
-        # chunk_key strings (yyyy-MM-dd-HH) order like their timestamps —
-        # the range predicate on the PARTITION column prunes file listing
-        lo = start.strftime("%Y-%m-%d-%H")
-        hi = end.strftime("%Y-%m-%d-%H")
-        t = t.filter((F.col("chunk_key") >= lo) & (F.col("chunk_key") <= hi))
-    t = t.filter(
-        (F.col("window_start") >= F.lit(start)) & (F.col("window_start") < F.lit(end))
-    ).filter(F.col("metric").rlike(f"^(?:{metric})$"))
-    if bucket is not None:
-        t = t.filter(F.col("bucket") == bucket)
-
-    w = F.window("window_start", f"{step_s} seconds")
+    t = _read_range(store, tier_name, start, end, metric, bucket)
     re_rolled = (
-        t.groupBy("bucket", "metric", w.alias("w"))
+        t.groupBy("bucket", "metric", window_start("window_start", step_w).alias("window_start"))
         .agg(
             F.sum("cnt").alias("cnt"),
             F.sum("sum_value").alias("sum_value"),
             F.min("min_value").alias("min_value"),
             F.max("max_value").alias("max_value"),
         )
-        .select(
-            "bucket", "metric", F.col("w.start").alias("window_start"),
-            "cnt", "sum_value", "min_value", "max_value",
-        )
     )
     if fill is not None:
         from beamium_spark.operators.gapfill import gapfill
 
-        step_interval = {60: "1 minute", 3600: "1 hour", 86400: "1 day"}.get(step_s)
-        if step_interval is None:
+        if step_s not in (60, 3600, 86400):
             raise ValueError("fill requires a 1m/1h/1d step")
         re_rolled = gapfill(
             re_rolled,
-            step_interval,
+            step_w,
             strategy=fill,
             bounds=(start, end - dt.timedelta(seconds=step_s)),
         )
 
     value = {
-        "avg": F.col("sum_value") / F.col("cnt"),
+        # NULL, not a divide-by-zero, on the cnt=0 rows fill='linear' makes
+        "avg": F.col("sum_value") / F.nullif(F.col("cnt"), F.lit(0)),
         "sum": F.col("sum_value"),
         "min": F.col("min_value"),
         "max": F.col("max_value"),
         "cnt": F.col("cnt").cast("double"),
     }[agg]
+    if fill == "zero":
+        value = F.when(F.col("filled"), F.lit(0.0)).otherwise(value)
     cols = ["bucket", "metric", "window_start", value.alias("value")]
     if fill is not None:
         cols.append("filled")
@@ -447,8 +439,6 @@ def _shape(
         )
         out = out.withColumn("value", delta / F.lit(float(step_s)))
     if ewma is not None:
-        from beamium_spark.operators.rollup import tier_ewma
-
         e = tier_ewma(
             out.select("bucket", "metric", "window_start", "value"),
             alpha=ewma,
@@ -457,8 +447,6 @@ def _shape(
         # dashboard-sized frames; annotate without disturbing fill columns
         out = out.join(e, ["bucket", "metric", "window_start"], "left")
     if decompose is not None:
-        from beamium_spark.operators.rollup import tier_decompose
-
         d = tier_decompose(
             out.select("bucket", "metric", "window_start", "value"),
             period=decompose,
@@ -467,8 +455,6 @@ def _shape(
         ).select("bucket", "metric", "window_start", "trend", "seasonal", "remainder")
         out = out.join(d, ["bucket", "metric", "window_start"], "left")
     if alert is not None:
-        from beamium_spark.operators.rollup import tier_alert_rule
-
         a = tier_alert_rule(
             out.select("bucket", "metric", "window_start", "value"),
             threshold=alert,
@@ -479,8 +465,6 @@ def _shape(
         ).select("bucket", "metric", "window_start", "state", "streak")
         out = out.join(a, ["bucket", "metric", "window_start"], "left")
     if anomaly is not None:
-        from beamium_spark.operators.rollup import tier_anomalies
-
         out = tier_anomalies(
             out,
             k=anomaly,

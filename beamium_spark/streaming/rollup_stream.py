@@ -23,17 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), True),
-        T.StructField("warc_ts", T.TimestampType(), True),
-        T.StructField("html", T.BinaryType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-    ]
-)
+from beamium_spark.plans.job import PAGES_SCHEMA
 
 
 def read_pages_stream(

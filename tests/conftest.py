@@ -28,3 +28,17 @@ def tiny_web_pages(spark):
 
     path = ensure_web_pages(0.0003)
     return spark.read.parquet(path)
+
+
+@pytest.fixture(scope="session")
+def bare_spark(spark):
+    """A session with Spark's defaults where ``get_spark`` pins a conf the
+    engine's answers could depend on: parquet naive timestamps read as
+    TIMESTAMP_NTZ, ANSI mode on, static partition overwrite. ``newSession``
+    shares the SparkContext but gets its own SQLConf; builder-level confs
+    propagate into it, so each default is set explicitly."""
+    s = spark.newSession()
+    s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+    s.conf.set("spark.sql.ansi.enabled", "true")
+    s.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
+    return s

@@ -21,8 +21,16 @@ def _assert_same(a, b):
     assert a.count() == b.count()
 
 
-def test_full_run_then_noop(spark, pages_path, tmp_path):
-    job = RollupJob(spark, pages_path, str(tmp_path / "s"), JobConf(bucket_mode="site"))
+def _rows(df):
+    return sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
+
+
+@pytest.mark.parametrize("session", ["pinned", "bare"])
+def test_full_run_then_noop(spark, session, request, pages_path, tmp_path):
+    """A full run then a no-op rerun, under ``get_spark()`` and under a
+    bare session; the bare session's tiers equal the pinned session's."""
+    s = spark if session == "pinned" else request.getfixturevalue("bare_spark")
+    job = RollupJob(s, pages_path, str(tmp_path / "s"), JobConf(bucket_mode="site"))
     r1 = job.run()
     assert r1["chunks"] > 0
     assert r1["scraped"] > 0
@@ -33,6 +41,11 @@ def test_full_run_then_noop(spark, pages_path, tmp_path):
     # counters surfaced per tier
     ctr = {r["tier"]: r for r in job.counters().collect()}
     assert ctr["rollup_1m"]["scraped"] == r1["scraped"]
+    if session == "bare":
+        ref = RollupJob(spark, pages_path, str(tmp_path / "ref"), JobConf(bucket_mode="site"))
+        assert {**ref.run(), "run_id": None} == {**r1, "run_id": None}
+        for t in ("rollup_1m", "rollup_1h", "rollup_1d", "blocks"):
+            assert _rows(job.tier(t)) == _rows(ref.tier(t)), t
 
 
 def test_job_maintains_histogram_tier(spark, pages_path, tmp_path):

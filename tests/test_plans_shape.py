@@ -58,6 +58,40 @@ def test_cascade_reads_tier_not_raw(spark, pages):
     assert plan.count("FileScan parquet") == 1
 
 
+def test_query_re_rolls_use_the_window_key(spark, pages, tmp_path):
+    """query()'s tier re-roll and its M4 pixel columns group on the one
+    integer window key (rollup.window_start): no F.window struct and no
+    isnotnull(window) filter in either plan."""
+    import datetime as dt
+    import re
+
+    from beamium_spark.operators.blocks import encode_blocks
+    from beamium_spark.plans.query import query
+    from beamium_spark.sources.tables import ParquetTierStore
+
+    points = extract_points(pages, bucket_mode="site", metrics=("doc_count",))
+    store = ParquetTierStore(spark, str(tmp_path / "store"))
+    store.write_chunks(
+        rollup_tier(points, "1 minute").withColumn(
+            "chunk_start", F.date_trunc("hour", "window_start")
+        ),
+        "rollup_1m",
+    )
+    store.write_chunks(
+        encode_blocks(points.select("bucket", "metric", "ts", "value"), "1 hour"),
+        "blocks",
+    )
+    t0 = dt.datetime(2025, 1, 1)
+    for kw in ({"step": "10 minutes", "agg": "sum"},
+               {"step": "15 minutes", "render": "m4"}):
+        df = query(store, "doc_count", t0, t0 + dt.timedelta(hours=6), **kw)
+        qe = df._jdf.queryExecution()
+        for plan in (qe.optimizedPlan().toString(), _plan(df)):
+            # F.window's struct column and its isnotnull(window#..) filter
+            assert not re.search(r"\bwindow#\d|named_struct\(start", plan), kw
+        assert df.count() > 0
+
+
 def test_rollup_is_partial_plus_final(spark, pages):
     """The windowed rollup must be a two-phase hash aggregate around ONE
     exchange keyed on the group key (map-side combine bounds shuffle rows

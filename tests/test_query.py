@@ -2,6 +2,7 @@
 chunk-partition pruning."""
 
 import datetime as dt
+import itertools
 
 import pytest
 from pyspark.sql import functions as F
@@ -10,9 +11,10 @@ from beamium_spark.plans.query import parse_step, query, select_tier
 from beamium_spark.sources.tables import ParquetTierStore
 
 
-@pytest.fixture()
-def store(spark, tmp_path):
-    s = ParquetTierStore(spark, str(tmp_path / "store"))
+def _tier_store(spark, root):
+    """1m and 1h tiers of one doc_count series: (cnt 2, sum 4.0, min 1.0,
+    max 3.0) every other minute over three hours."""
+    s = ParquetTierStore(spark, root)
     t0 = dt.datetime(2025, 1, 1)
     rows_1m = [
         (0, "doc_count", t0 + dt.timedelta(minutes=m), 2, 4.0, 1.0, 3.0)
@@ -36,6 +38,53 @@ def store(spark, tmp_path):
     )
     s.write_chunks(t1h, "rollup_1h")
     return s
+
+
+@pytest.fixture()
+def store(spark, tmp_path):
+    return _tier_store(spark, str(tmp_path / "store"))
+
+
+#: one query of each kind in the perfbench dashboard mix, plus avg + fill
+_DASHBOARD_KINDS = [
+    {"step": "1 minute", "agg": "sum"},
+    {"step": "10 minutes", "agg": "max"},
+    {"step": "1 hour", "agg": "avg"},
+    {"step": "1 day", "agg": "sum"},
+    {"step": "1 hour", "agg": "avg", "bucket": 0},
+    {"step": "1 hour", "agg": "sum", "fill": "zero"},
+    {"step": "1 hour", "agg": "avg", "fill": "zero"},
+    {"step": "1 hour", "agg": "sum", "rate": True},
+    {"step": "1 hour", "stat": "p95"},
+    {"step": "15 minutes", "render": "m4"},
+]
+
+
+def test_query_kinds_bare_session_match_pinned(spark, bare_spark, tmp_path):
+    """Every dashboard query kind returns the same rows under a bare
+    session as under get_spark(), each over a store its session wrote."""
+    from beamium_spark.operators.blocks import encode_blocks
+
+    t0 = dt.datetime(2025, 1, 1)
+    points = [
+        (0, "doc_count", t0 + dt.timedelta(minutes=m, seconds=7), float(m % 5))
+        for m in range(0, 180, 2)
+    ]
+    stores = []
+    for name, s in (("pinned", spark), ("bare", bare_spark)):
+        st = _tier_store(s, str(tmp_path / name))
+        pts = s.createDataFrame(points, "bucket int, metric string, ts timestamp, value double")
+        st.write_chunks(encode_blocks(pts, "1 hour"), "blocks")
+        stores.append(st)
+    for kw in _DASHBOARD_KINDS:
+        pinned, bare = (
+            sorted(
+                tuple(r)
+                for r in query(st, "doc_count", t0, t0 + dt.timedelta(hours=4), **kw).collect()
+            )
+            for st in stores
+        )
+        assert pinned and bare == pinned, kw
 
 
 def test_parse_step():
@@ -74,15 +123,29 @@ def test_query_sum_2h_step_re_rolls(store):
     assert out == {0: 240.0, 2: 120.0}  # hours 0+1 merged; hour 2 alone
 
 
-def test_query_fill_zero_densifies(store):
+@pytest.mark.parametrize(
+    "agg,fill", list(itertools.product(("avg", "sum", "min", "max", "cnt"),
+                                       ("zero", "linear", "ffill")))
+)
+def test_query_fill_zero_densifies(store, agg, fill):
+    """Every agg x fill pair densifies the grid; filled rows carry the
+    value query() documents: 0.0 under zero, the interpolated sum (cnt 0,
+    other aggs NULL) under linear, the carried tuple's value under ffill."""
     out = query(
         store, "doc_count", "2025-01-01T00:00:00", "2025-01-01T01:00:00",
-        step="1 minute", agg="sum", fill="zero",
+        step="1 minute", agg=agg, fill=fill,
     )
     rows = out.collect()
     assert len(rows) == 60  # full grid
+    observed = {"avg": 2.0, "sum": 4.0, "min": 1.0, "max": 3.0, "cnt": 2.0}[agg]
+    assert all(r["value"] == observed for r in rows if not r["filled"])
+    want = {
+        "zero": 0.0,
+        "linear": {"sum": 4.0, "cnt": 0.0}.get(agg),
+        "ffill": observed,
+    }[fill]
     filled = [r for r in rows if r["filled"]]
-    assert len(filled) == 30 and all(r["value"] == 0.0 for r in filled)
+    assert len(filled) == 30 and all(r["value"] == want for r in filled)
 
 
 def test_query_metric_regex_is_anchored(store):
@@ -141,6 +204,8 @@ def test_query_smooth_rate_exclusive_and_validation(store):
         query(store, "doc_count", "2025-01-01", "2025-01-02", smooth=0)
     with _pytest.raises(ValueError, match="rate must be"):
         query(store, "doc_count", "2025-01-01", "2025-01-02", rate="bogus")
+    with _pytest.raises(ValueError, match="agg must be"):
+        query(store, "doc_count", "2025-01-01", "2025-01-02", agg="median")
 
 
 def test_query_anomaly_annotation(store):
