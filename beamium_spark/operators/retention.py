@@ -12,7 +12,8 @@ Engine mapping: a retention *policy* per tier — the 1m tier keeps hours,
 (TTL) and an oldest-first running-size cutoff (size cap). Both return the
 evicted count for the counters table.
 
-Scale: TTL is partition pruning + directory unlink (no data read); the
+Scale: TTL is a partition listing + directory unlink, with the evicted
+rows counted from the parquet footers (no data read, no Spark job); the
 size cap needs one global ordering of chunk sizes — computed over the
 *block accounting* (bytes per chunk), thousands of rows at 10^12-doc
 scale, never the data itself.
@@ -20,34 +21,43 @@ scale, never the data itself.
 
 from __future__ import annotations
 
+import datetime as dt
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def ttl_cutoff_date(now_ts: str, ttl_hours: float) -> str:
-    """Partition cutoff (date granularity) for a TTL; conservative: only
-    partitions strictly older than the cutoff *date* are dropped whole."""
-    import datetime as dt
-
+def ttl_cutoff_key(now_ts: str, ttl_hours: float) -> str:
+    """The first ``chunk_key`` (``yyyy-MM-dd-HH``) a TTL keeps: the hour
+    of ``now − ttl``, rounded up when ``now − ttl`` falls inside an hour.
+    ``ttl_hours`` may be fractional (the reference accepts bare seconds
+    and sub-hour humanized ttls like '30m', src/conf.rs:350-359); it is
+    carried in whole seconds."""
     now = dt.datetime.fromisoformat(now_ts)
-    return (now - dt.timedelta(hours=ttl_hours)).date().isoformat()
+    if now.tzinfo is not None:  # the store's keys are UTC wall time
+        now = now.astimezone(dt.timezone.utc).replace(tzinfo=None)
+    cutoff = now - dt.timedelta(seconds=int(round(ttl_hours * 3600)))
+    hour = cutoff.replace(minute=0, second=0, microsecond=0)
+    if hour < cutoff:
+        hour += dt.timedelta(hours=1)
+    return hour.strftime("%Y-%m-%d-%H")
 
 
 def ttl_evict(store, table: str, now_ts: str, ttl_hours: float) -> dict:
-    """Drop whole chunk partitions past TTL, then row-level trim the
-    boundary partition. Returns counters (beamium_skip_ttl analogue).
+    """Evict every row with ``chunk_start < now − ttl`` by unlinking whole
+    partitions. Returns counters (beamium_skip_ttl analogue):
+    ``expired_partitions`` and ``expired_rows``; ``expired_rows`` counts
+    every evicted row, whole partitions included, read from the parquet
+    footers before the unlink.
 
-    ``ttl_hours`` may be fractional (the reference accepts bare seconds
-    and sub-hour humanized ttls like '30m', src/conf.rs:350-359) — the
-    cutoff is carried in whole seconds, never truncated to hours."""
-    cutoff_date = ttl_cutoff_date(now_ts, ttl_hours)
-    parts = store.drop_partitions_older_than(table, cutoff_date)
-    rows = 0
-    if store.exists(table):
-        cutoff_expr = F.lit(now_ts).cast("timestamp") - F.expr(
-            f"interval {int(round(ttl_hours * 3600))} seconds"
-        )
-        rows = store.delete_where(table, F.col("chunk_start") < cutoff_expr)
+    Exact because every writer's ``chunk_start`` is hour-truncated or
+    coarser (tiers, blocks, histogram and distinct tiers, alert
+    episodes, daemon sinks), so each ``chunk_key=yyyy-MM-dd-HH``
+    partition holds a single ``chunk_start`` and is either wholly
+    expired or wholly kept. No Spark job runs."""
+    cutoff = ttl_cutoff_key(now_ts, ttl_hours)
+    rows = store.rows_older_than(table, cutoff)
+    parts = store.drop_partitions_older_than(table, cutoff)
     return {"expired_partitions": parts, "expired_rows": rows}
 
 

@@ -1,51 +1,56 @@
-"""Checkpoint / lineage manifest: the engine's Disk-Fail-Over state.
+"""Checkpoint log: the engine's Disk-Fail-Over state, kept by the driver.
 
-Beamium's resumability primitive is "state lives on the filesystem":
-new work = scanned files minus the seen-set (/root/reference/
-src/router.rs:56-77), deletion only after a confirmed forward
-(src/lib/asynch/http.rs:161-176), and a crash replays exactly the files
-still on disk (README.md:6). The engine's equivalents:
+Beamium's resumability primitive is "state lives on the filesystem": a
+directory scan finds new files (beamium's src/lib/asynch/fs.rs:83),
+the seen-set difference decides the work (src/router.rs:56-77), an
+atomic ``*.tmp`` → rename marks a file done (src/scraper.rs:249-265),
+and deletion waits for a confirmed forward (src/lib/asynch/http.rs:
+161-176). The engine keeps the same state as an append-only log of
+small JSON segments under ``<state_root>/_log/``, written and read by the
+driver through the store's Hadoop FileSystem — no Spark job:
 
-- seen-set            → manifest rows (state='committed') per (chunk, tier)
-- set difference      → **left-anti join** of source chunks vs manifest
-- delete-after-send   → manifest row appended only *after* the tier data
-                        write; the data write itself is an idempotent
-                        partition overwrite, so a kill between the two
-                        replays the chunk with no duplicates (K2 semantics)
-- retry w/ backoff    → ``commit_with_retry`` with beamium's constants:
-                        initial 500 ms, max 60 s, ×1.5, ±0.3 jitter
-                        (src/conf.rs:135-138, src/lib/asynch/http.rs:87-93)
-- counters            → scraped / filtered / forwarded per manifest row
-                        (the north_star triple; beamium's
-                        beamium_fetch_datapoints / line filters /
-                        beamium_push_datapoints, src/scraper.rs:35-46,
-                        src/lib/asynch/http.rs:31-47)
+- directory scan     → ``files`` records: each source file seen (path,
+                       length, mtime) and the hour-chunks it holds
+- seen-set difference → Python set arithmetic over the log
+                       (``Manifest.pending``): chunks never committed,
+                       or whose source fingerprint changed since commit
+- atomic ``*.tmp``    → each segment is written ``.<name>.tmp`` then
+                       renamed; readers skip dot-files, so a kill leaves
+                       no partial segment
+- delete-after-send  → a run's one fence segment (commit records, source
+                       baseline, ``run_complete``) lands only after every
+                       data write; data writes are idempotent partition
+                       overwrites, so a kill before the fence replays the
+                       chunk with no duplicates (K2 semantics)
+- retry w/ backoff   → ``commit_with_retry`` with beamium's constants:
+                       initial 500 ms, max 60 s, ×1.5, ±0.3 jitter
+                       (src/conf.rs:135-138, src/lib/asynch/http.rs:87-93)
+- counters           → scraped / filtered / forwarded per commit record
+                       (the north_star triple; beamium's
+                       beamium_fetch_datapoints / line filters /
+                       beamium_push_datapoints, src/scraper.rs:35-46,
+                       src/lib/asynch/http.rs:31-47)
+
+A segment is ``{"run_id", "at", "records": [...]}``; a record is one of
+``{"event", "info"}``, ``{"commit": tier, "chunks", "scraped",
+"filtered", "forwarded"}``, ``{"baseline": {chunk: fingerprint}}`` or
+``{"files": {file id: [chunk, ...]}}``. Chunks are ISO timestamps.
+Segments are named ``<seq>-<run_id>.json`` and read in ``seq`` order;
+later baselines supersede earlier ones.
 """
 
 from __future__ import annotations
 
+import datetime as dt
+import json
 import random
 import time
 import uuid
+from collections import Counter
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame
 
-MANIFEST_TABLE = "checkpoint_manifest"
-
-MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("chunk_start", T.TimestampType(), False),
-        T.StructField("tier", T.StringType(), False),
-        T.StructField("state", T.StringType(), False),
-        T.StructField("scraped", T.LongType(), True),
-        T.StructField("filtered", T.LongType(), True),
-        T.StructField("forwarded", T.LongType(), True),
-        T.StructField("committed_at", T.TimestampType(), True),
-    ]
-)
+LOG_DIR = "_log"
 
 # beamium backoff defaults (src/conf.rs:135-138)
 BACKOFF_INITIAL_S = 0.5
@@ -54,98 +59,148 @@ BACKOFF_MULTIPLIER = 1.5
 BACKOFF_RANDOMIZATION = 0.3
 
 
+def commit_record(
+    tier: str, chunk_starts, scraped: int = 0, filtered: int = 0, forwarded: int = 0
+) -> dict:
+    return {
+        "commit": tier,
+        "chunks": [c.isoformat() for c in chunk_starts],
+        "scraped": scraped,
+        "filtered": filtered,
+        "forwarded": forwarded,
+    }
+
+
+def event_record(event: str, info: str = "") -> dict:
+    return {"event": event, "info": info}
+
+
+def baseline_record(fingerprints: dict) -> dict:
+    """Per-chunk source fingerprint at commit (a file-set digest for the
+    job, a point count for the daemon): a committed chunk whose live
+    fingerprint differs is replayed."""
+    return {"baseline": {c.isoformat(): v for c, v in fingerprints.items()}}
+
+
 class Manifest:
-    def __init__(self, store, table: str = MANIFEST_TABLE):
+    def __init__(self, store):
         self.store = store
-        self.table = table
+        self.root = f"{store.root}/{LOG_DIR}"
+        # segments are immutable once renamed: each is read once
+        self._cache: dict[str, dict] = {}
 
-    def read(self) -> DataFrame:
-        if not self.store.exists(self.table):
-            return self.store.spark.createDataFrame([], MANIFEST_SCHEMA)
-        return self.store.read(self.table)
+    # ---- the log ---------------------------------------------------------
 
-    def committed_chunks(self, tier: str) -> DataFrame:
-        return (
-            self.read()
-            .filter((F.col("tier") == tier) & (F.col("state") == "committed"))
-            .select("chunk_start")
-            .distinct()
+    def _names(self) -> list[str]:
+        return sorted(
+            n for n, is_dir in self.store._ls(self.root)
+            if not is_dir and n.endswith(".json") and not n.startswith(".")
         )
 
-    def pending_chunks(self, source_chunks: DataFrame, tier: str) -> DataFrame:
-        """source chunks (one col ``chunk_start``) not yet committed for
-        ``tier`` — the left-anti join standing in for beamium's seen-set
-        difference (src/router.rs:63-77)."""
-        return source_chunks.join(
-            self.committed_chunks(tier), "chunk_start", "left_anti"
+    def segments(self) -> list[tuple[str, dict]]:
+        """(name, segment) of every renamed segment, in write order."""
+        out = []
+        for name in self._names():
+            if name not in self._cache:
+                raw = self.store.read_bytes(f"{self.root}/{name}")
+                self._cache[name] = json.loads(raw)
+            out.append((name, self._cache[name]))
+        return out
+
+    def _records(self, key: str) -> list[dict]:
+        return [r for _, seg in self.segments() for r in seg["records"] if key in r]
+
+    def append(self, run_id: str, records: list[dict]) -> str:
+        """Write one segment (``.tmp`` then rename); returns its name."""
+        names = self._names()
+        seq = int(names[-1].split("-", 1)[0]) + 1 if names else 1
+        name = f"{seq:010d}-{run_id}.json"
+        seg = {
+            "run_id": run_id,
+            "at": dt.datetime.now(dt.timezone.utc).isoformat(),
+            "records": records,
+        }
+        self.store.write_bytes(
+            f"{self.root}/{name}", json.dumps(seg, separators=(",", ":")).encode()
+        )
+        self._cache[name] = seg
+        return name
+
+    def commit(self, run_id: str, records: list[dict]) -> str:
+        """The resumability fence: one segment holding a run's commit
+        records (and whatever must land atomically with them)."""
+        return self.append(run_id, records)
+
+    # ---- discovery state -------------------------------------------------
+
+    def committed_chunks(self, tier: str) -> set:
+        return {
+            dt.datetime.fromisoformat(c)
+            for r in self._records("commit") if r["commit"] == tier
+            for c in r["chunks"]
+        }
+
+    def baseline(self) -> dict:
+        out = {}
+        for r in self._records("baseline"):
+            out.update(r["baseline"])
+        return {dt.datetime.fromisoformat(c): v for c, v in out.items()}
+
+    def source_files(self) -> dict[str, list]:
+        """file id → hour-chunks it holds, for every source file seen."""
+        out: dict[str, list] = {}
+        for r in self._records("files"):
+            for fid, chunks in r["files"].items():
+                out[fid] = [dt.datetime.fromisoformat(c) for c in chunks]
+        return out
+
+    def pending(self, fingerprints: dict, tiers: list[str]) -> list:
+        """Chunks of ``fingerprints`` (chunk → live source fingerprint)
+        not committed for every tier in ``tiers``, or whose fingerprint
+        differs from the baseline recorded at their commit — the
+        seen-set difference (src/router.rs:63-77) plus beamium's
+        re-forward of any new file in a scanned directory."""
+        committed = set.intersection(*(self.committed_chunks(t) for t in tiers)) if tiers else set()
+        base = self.baseline()
+        return sorted(
+            c for c, fp in fingerprints.items() if c not in committed or base.get(c) != fp
         )
 
-    def commit(
-        self,
-        run_id: str,
-        chunk_starts: list,
-        tier: str,
-        scraped: int = 0,
-        filtered: int = 0,
-        forwarded: int = 0,
-    ) -> None:
-        spark = self.store.spark
-        rows = [
-            (run_id, cs, tier, "committed", scraped, filtered, forwarded)
-            for cs in chunk_starts
-        ]
-        df = spark.createDataFrame(
-            rows,
-            "run_id string, chunk_start timestamp, tier string, state string, "
-            "scraped long, filtered long, forwarded long",
-        ).withColumn("committed_at", F.current_timestamp())
-        self.store.append(df, self.table)
-
-    # ---- run metadata: reload/restart + commit-status observability ------
+    # ---- run metadata: reload/restart + commit observability -------------
     # beamium_reload_count (src/main.rs:27-33, inc :201) and
-    # beamium_push_http_status (src/lib/asynch/http.rs:31-47) analogues:
-    # every run()/reload/commit outcome lands as a row in `run_meta`.
+    # beamium_push_http_status (src/lib/asynch/http.rs:31-47) analogues.
 
     def record_event(self, run_id: str, event: str, info: str = "") -> None:
-        spark = self.store.spark
-        df = spark.createDataFrame(
-            [(run_id, event, info)], "run_id string, event string, info string"
-        ).withColumn("at", F.current_timestamp())
-        self.store.append(df, "run_meta")
+        self.append(run_id, [event_record(event, info)])
 
     def run_events(self) -> DataFrame:
-        if not self.store.exists("run_meta"):
-            return self.store.spark.createDataFrame(
-                [], "run_id string, event string, info string, at timestamp"
-            )
-        return self.store.read("run_meta")
+        rows = [
+            (seg["run_id"], r["event"], r["info"], dt.datetime.fromisoformat(seg["at"]))
+            for _, seg in self.segments() for r in seg["records"] if "event" in r
+        ]
+        return self.store.spark.createDataFrame(
+            rows, "run_id string, event string, info string, at timestamp"
+        )
 
-    def event_counts(self) -> DataFrame:
-        """Gauge table: rows per event kind (run_start / run_complete /
-        reload / commit_ok / commit_retry)."""
-        return self.run_events().groupBy("event").agg(F.count("*").alias("n"))
+    def event_counts(self) -> dict[str, int]:
+        """Events per kind (run_start / run_complete / reload)."""
+        return dict(Counter(r["event"] for r in self._records("event")))
+
+    def commits(self, tier: str) -> int:
+        """Fences that committed ``tier`` (commits_ok)."""
+        return sum(1 for r in self._records("commit") if r["commit"] == tier)
 
     def counters(self) -> DataFrame:
         """Per-tier counter totals — the /metrics exposition analogue
         (src/cmd.rs:80-106), queryable via Spark SQL."""
-        # chunk rows of one commit share the same run totals → collapse to
-        # per-(run, tier) first, then sum across runs
-        per_run = (
-            self.read()
-            .filter(F.col("state") == "committed")
-            .groupBy("run_id", "tier")
-            .agg(
-                F.count("*").alias("chunks"),
-                F.max("scraped").alias("scraped"),
-                F.max("filtered").alias("filtered"),
-                F.max("forwarded").alias("forwarded"),
-            )
-        )
-        return per_run.groupBy("tier").agg(
-            F.sum("chunks").alias("chunks"),
-            F.sum("scraped").alias("scraped"),
-            F.sum("filtered").alias("filtered"),
-            F.sum("forwarded").alias("forwarded"),
+        tot: dict[str, list] = {}
+        for r in self._records("commit"):
+            t = tot.setdefault(r["commit"], [0, 0, 0, 0])
+            for i, k in enumerate(("chunks", "scraped", "filtered", "forwarded")):
+                t[i] += len(r[k]) if k == "chunks" else r[k]
+        return self.store.spark.createDataFrame(
+            [(tier, *v) for tier, v in sorted(tot.items())],
+            "tier string, chunks long, scraped long, filtered long, forwarded long",
         )
 
 
@@ -162,22 +217,17 @@ def commit_with_retry(
     randomization: float = BACKOFF_RANDOMIZATION,
     sleep=time.sleep,
     rng: random.Random | None = None,
-    observer=None,
 ):
     """Driver-side commit retry with beamium's exponential backoff
     (state machine at src/lib/asynch/http.rs:181-232; reset-on-success
     :87-93). Spark task retries cover executor failure; this covers the
-    commit action itself. ``observer(attempts)`` is invoked on success —
-    the push_http_status analogue feeding the run_meta event table."""
+    commit action itself."""
     rng = rng or random.Random()
     delay = initial_s
     last_err = None
-    for attempt in range(1, max_attempts + 1):
+    for _ in range(max_attempts):
         try:
-            out = fn()
-            if observer is not None:
-                observer(attempt)
-            return out
+            return fn()
         except Exception as e:  # noqa: BLE001 - commit errors are retryable
             last_err = e
             jitter = 1.0 + randomization * (2.0 * rng.random() - 1.0)

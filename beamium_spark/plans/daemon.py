@@ -12,11 +12,14 @@ eviction, and a config change restarts everything from on-disk state.
   metric whitelist (F3, src/scraper.rs:204-208) and per-scraper labels
   (src/conf.rs:260-264) applied on read;
 - the router pass applies global labels and writes one selector-filtered
-  copy per sink (R1/F4, plans/router.py), committing manifest rows only
-  after every sink write — beamium's delete-after-all-writes;
-- work discovery is the left-anti join of source hour-chunks vs chunks
-  committed for EVERY sink (a crash mid-route replays the chunk into all
-  sinks idempotently — dynamic partition overwrite);
+  copy per sink (R1/F4, plans/router.py), then lands one fence segment
+  in the checkpoint log (every sink's commit record, the per-chunk
+  point-count baseline and ``run_complete``) — beamium's
+  delete-after-all-writes;
+- work discovery: source hour-chunks not committed for EVERY sink, plus
+  committed chunks whose point count drifted from the baseline (a crash
+  mid-route replays the chunk into all sinks idempotently — dynamic
+  partition overwrite);
 - per-sink retention applies the sink's ``ttl``/``size`` caps
   (K4/K5, src/sink.rs:101-222);
 - ``conf.watch_and_rerun`` + ``record_reload`` give the 2s-debounced hot
@@ -24,9 +27,9 @@ eviction, and a config change restarts everything from on-disk state.
   daemon resumes exactly where the old one stopped.
 
 Scale notes: everything dataflow-heavy is one cached points DataFrame per
-pass; discovery and manifests are O(chunks). The scrape "tick"
-(src/scraper.rs:90) is the caller's loop cadence — each ``run_once`` is
-one micro-batch.
+pass; discovery is one count per chunk, compared with the log on the
+driver. The scrape "tick" (src/scraper.rs:90) is the caller's loop
+cadence — each ``run_once`` is one micro-batch.
 """
 
 from __future__ import annotations
@@ -38,7 +41,12 @@ from pyspark.sql import functions as F
 
 from beamium_spark.conf import EngineConf, ScraperConf
 from beamium_spark.operators.retention import size_cap_evict, ttl_evict
-from beamium_spark.plans.checkpoint import Manifest, new_run_id
+from beamium_spark.plans.checkpoint import (
+    Manifest,
+    baseline_record,
+    event_record,
+    new_run_id,
+)
 from beamium_spark.plans.router import route_multicast
 from beamium_spark.sources.tables import ParquetTierStore
 
@@ -100,56 +108,25 @@ class ScrapeDaemon:
     # ---- discovery (R2): chunks not yet committed for every sink ----------
 
     def pending_chunks(self, points: DataFrame) -> list:
-        src_counts = (
+        """Chunks not committed for ALL sinks (beamium only deletes the
+        source file after every sink write, src/router.rs:86-104), plus
+        late lines in an already-routed hour: a committed chunk replays
+        when its point count drifts from the fence-time baseline (beamium
+        re-forwards any new file regardless of its timestamps)."""
+        rows = (
             points.groupBy(F.date_trunc("hour", "ts").alias("chunk_start"))
             .agg(F.count("*").alias("n_points"))
-            .cache()
+            .collect()
         )
-        src_chunks = src_counts.select("chunk_start")
-        # a chunk is pending unless committed for ALL sinks (beamium only
-        # deletes the source file after every sink write, src/router.rs:86-104)
-        committed_all = None
-        for sink in self.conf.sinks:
-            c = self.manifest.committed_chunks(sink.table)
-            committed_all = c if committed_all is None else committed_all.join(
-                c, "chunk_start", "left_semi"
-            )
-        if committed_all is None:
-            out = src_chunks
-        else:
-            new = src_chunks.join(committed_all, "chunk_start", "left_anti")
-            # late lines in an already-routed hour: replay the chunk when
-            # its point count drifts from the fence-time baseline (same
-            # dirty-chunk semantics as RollupJob.dirty_chunks — beamium
-            # re-forwards any new file regardless of its timestamps)
-            if self.store.exists("chunk_counts"):
-                rec = self.store.read("chunk_counts").select(
-                    "chunk_start", F.col("n_points").alias("__rec")
-                )
-                dirty = (
-                    committed_all.join(src_counts, "chunk_start")
-                    .join(rec, "chunk_start", "left")
-                    .filter(
-                        F.col("__rec").isNull() | (F.col("__rec") != F.col("n_points"))
-                    )
-                    .select("chunk_start")
-                )
-            else:
-                dirty = committed_all.join(
-                    src_counts, "chunk_start", "left_semi"
-                ).select("chunk_start")
-            out = new.unionByName(dirty).distinct()
-        result = sorted(r["chunk_start"] for r in out.collect())
-        src_counts.unpersist()
-        return result
+        self._counts = {
+            r["chunk_start"]: r["n_points"] for r in rows if r["chunk_start"] is not None
+        }
+        return self.manifest.pending(self._counts, [s.table for s in self.conf.sinks])
 
-    def _record_chunk_counts(self, points: DataFrame, pending: list) -> None:
-        counts = (
-            points.filter(F.date_trunc("hour", "ts").isin(pending))
-            .groupBy(F.date_trunc("hour", "ts").alias("chunk_start"))
-            .agg(F.count("*").alias("n_points"))
-        )
-        self.store.write_chunks(counts, "chunk_counts", "chunk_start")
+    def _record_chunk_counts(self, pending: list) -> dict:
+        """The late-data baseline for the fence: the point counts this
+        pass's discovery saw for ``pending``."""
+        return baseline_record({c: self._counts[c] for c in pending})
 
     # ---- one tick ----------------------------------------------------------
 
@@ -163,14 +140,10 @@ class ScrapeDaemon:
             return report
         self.manifest.record_event(run_id, "run_start", f"chunks={len(pending)}")
         batch = points.filter(F.date_trunc("hour", "ts").isin(pending))
-        counts = route_multicast(
-            batch, self.conf, self.store, self.manifest, run_id, pending
+        report["forwarded"] = route_multicast(
+            batch, self.conf, self.store, self.manifest, run_id, pending,
+            fence=[self._record_chunk_counts(pending), event_record("run_complete")],
         )
-        report["forwarded"] = counts
-        # late-data baseline after every sink committed (crash before this
-        # leaves the chunk count-less → dirty-once → idempotent replay)
-        self._record_chunk_counts(points, pending)
-        self.manifest.record_event(run_id, "run_complete")
         return report
 
     # ---- retention (K4/K5 per sink conf) -----------------------------------

@@ -3,31 +3,40 @@
 One ``run()`` is a micro-batch pass (beamium's scrape tick,
 /root/reference/src/scraper.rs:90-135):
 
-1. discover work: distinct hour-chunks in the source minus committed
-   manifest chunks (anti-join resumability, src/router.rs:56-77), PLUS
-   committed chunks whose source row count drifted from the fence-time
-   baseline — late-arriving data replays its chunk exactly like beamium
-   re-forwards any new file in a scanned directory;
+1. discover work by source file, as beamium scans its directory
+   (src/lib/asynch/fs.rs:83): list the source files, scan only files the
+   checkpoint log has never seen to learn which hour-chunks each holds,
+   then take the chunks never committed PLUS committed chunks whose set
+   of source files changed since their commit — late-arriving,
+   replaced or removed files replay their chunks exactly like beamium
+   re-forwards any new file in a scanned directory (src/router.rs:56-77);
 2. per pending chunk set: extract points → 1m rollup → idempotent
-   partition overwrite → Gorilla blocks → manifest commit with backoff;
+   partition overwrite → Gorilla blocks;
 3. cascade: recompute 1h windows of the touched hours and 1d windows of
    the touched days **from the tier below** (decomposable tuples — raw
    data is read exactly once, by the 1m pass);
-4. retention pass per tier policy (TTL / size cap).
+4. the fence: one log segment with the 1m/1h/1d commit records, the
+   chunks' source-file baseline and ``run_complete``;
+5. retention pass per tier policy (TTL / size cap).
 
 Kill the driver at any point: data writes are per-chunk idempotent
-overwrites and the manifest row lands only after the write, so a rerun
-replays exactly the unforwarded chunks (the DFO guarantee, README.md:6).
+overwrites and the fence lands only after the writes, so a rerun replays
+exactly the unforwarded chunks (the DFO guarantee, README.md:6).
 
-Scale notes: chunk discovery and manifests are tiny DataFrames; the only
-raw-data scan per pass is the 1m rollup over pending chunks, pruned by a
-``warc_ts`` range predicate that reaches the parquet row-group stats (the
-fixture is written time-sorted for exactly this reason).
+Scale notes: discovery and the checkpoint log are driver-side listings
+and small files; the only raw-data scans per pass are the ``warc_ts``
+scan of never-seen source files and the 1m rollup over pending chunks,
+pruned by a ``warc_ts`` range predicate that reaches the parquet
+row-group stats (the fixture is written time-sorted for exactly this
+reason).
 """
 
 from __future__ import annotations
 
+import hashlib
+from collections import defaultdict
 from dataclasses import dataclass, field
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,7 +46,14 @@ from beamium_spark.operators.blocks import encode_blocks
 from beamium_spark.operators.extract import extract_points
 from beamium_spark.operators.retention import size_cap_evict, ttl_evict
 from beamium_spark.operators.rollup import rollup_cascade, rollup_tier, rollup_tier_salted
-from beamium_spark.plans.checkpoint import Manifest, commit_with_retry, new_run_id
+from beamium_spark.plans.checkpoint import (
+    Manifest,
+    baseline_record,
+    commit_record,
+    commit_with_retry,
+    event_record,
+    new_run_id,
+)
 from beamium_spark.sources.tables import ParquetTierStore
 
 #: the pages source schema. Declared rather than inferred so ``warc_ts``
@@ -149,55 +165,57 @@ class RollupJob:
         """The source pages: every read of the source goes through here."""
         return self.spark.read.schema(PAGES_SCHEMA).parquet(self.pages_path)
 
-    def source_chunk_counts(self) -> DataFrame:
-        """(chunk_start, n_pages) over the source — the late-data detector's
-        ground truth. Reads the warc_ts column only (column-pruned scan);
-        the aggregate is the same O(chunks)-row frame discovery already
-        produces."""
-        return (
-            self.pages().filter(F.col("warc_ts").isNotNull())
-            .groupBy(F.date_trunc("hour", "warc_ts").alias("chunk_start"))
-            .agg(F.count("*").alias("n_pages"))
+    def _scan_chunks(self, files: list[str]) -> dict[str, list]:
+        """relative path → hour-chunks it holds, for ``files``: one Spark
+        job over their ``warc_ts``, grouped by ``input_file_name()``."""
+        base = self.pages_path.rstrip("/")
+        rows = (
+            self.spark.read.schema(PAGES_SCHEMA)
+            .parquet(*[f"{base}/{f}" for f in files])
+            .filter(F.col("warc_ts").isNotNull())
+            .groupBy(F.input_file_name().alias("f"))
+            .agg(F.collect_set(F.date_trunc("hour", "warc_ts")).alias("chunks"))
+            .collect()
         )
-
-    def dirty_chunks(self, src_counts: DataFrame) -> DataFrame:
-        """Committed chunks whose source row count no longer matches the
-        count recorded at their commit fence — i.e. chunks that received
-        LATE data after being forwarded. Beamium re-forwards any new file
-        in a scanned directory (src/router.rs:56-77); the engine's work
-        unit is the chunk, so the analogue is replaying a chunk whose
-        contents changed. A chunk committed without a recorded count
-        (pre-feature store, or a crash between the fence and the count
-        write) is treated as dirty once — the replay is an idempotent
-        overwrite, so it self-heals."""
-        committed = self.manifest.committed_chunks("rollup_1m")
-        if not self.store.exists("chunk_counts"):
-            return committed.join(src_counts, "chunk_start", "left_semi").select(
-                "chunk_start"
-            )
-        recorded = self.store.read("chunk_counts").select(
-            "chunk_start", F.col("n_pages").alias("__rec")
-        )
-        return (
-            committed.join(src_counts, "chunk_start")
-            .join(recorded, "chunk_start", "left")
-            .filter(F.col("__rec").isNull() | (F.col("__rec") != F.col("n_pages")))
-            .select("chunk_start")
-        )
+        fs, root = self.store._fs_path(base)
+        prefix = fs.makeQualified(root).toUri().getPath().rstrip("/") + "/"
+        found = {
+            unquote(urlparse(r["f"]).path)[len(prefix):]: sorted(r["chunks"])
+            for r in rows
+        }
+        return {f: found.get(f, []) for f in files}
 
     def pending_chunks(self) -> list:
-        """New chunks (never committed) ∪ dirty chunks (late data arrived
-        after commit) — both replayed through the same idempotent path."""
-        src_counts = self.source_chunk_counts().cache()
-        try:
-            new = self.manifest.pending_chunks(
-                src_counts.select("chunk_start"), "rollup_1m"
+        """New chunks (never committed) ∪ dirty chunks (the set of source
+        files touching them changed since their commit) — both replayed
+        through the same idempotent path. A file is identified by
+        (path, length, mtime), so a file replaced at the same path is a
+        new file. Only never-seen files are scanned, and their chunks go
+        to the log: a tick with no new source file runs no Spark job."""
+        listed = {
+            f"{path}|{size}|{mtime}": path
+            for path, size, mtime in self.store.list_files(self.pages_path)
+        }
+        seen = self.manifest.source_files()
+        new = sorted(fid for fid in listed if fid not in seen)
+        if new:
+            by_path = self._scan_chunks([listed[fid] for fid in new])
+            found = {fid: by_path[listed[fid]] for fid in new}
+            self.manifest.append(
+                "discover",
+                [{"files": {fid: [c.isoformat() for c in cs] for fid, cs in found.items()}}],
             )
-            pending = new.unionByName(self.dirty_chunks(src_counts)).distinct()
-            rows = pending.orderBy("chunk_start").collect()
-        finally:
-            src_counts.unpersist()
-        return [r["chunk_start"] for r in rows]
+            seen = {**seen, **found}
+        touching = defaultdict(list)
+        for fid in sorted(listed):
+            for c in seen[fid]:
+                touching[c].append(fid)
+        # the fence records the file sets this discovery saw
+        self._fingerprints = {
+            c: hashlib.sha1("\n".join(fids).encode()).hexdigest()[:16]
+            for c, fids in touching.items()
+        }
+        return self.manifest.pending(self._fingerprints, ["rollup_1m"])
 
     # ---- one micro-batch pass -------------------------------------------
 
@@ -365,37 +383,20 @@ class RollupJob:
                 lambda: self.store.write_chunks(eps, "alerts", "chunk_start")
             )
 
-        # the resumability fence: only now is the chunk "forwarded"
-        commit_with_retry(
-            lambda: self.manifest.commit(
-                run_id, pending, "rollup_1m",
+        # the resumability fence: only now is the chunk "forwarded". The
+        # 1h/1d counters and the late-data baseline ride the same atomic
+        # segment, so no crash can split them from the 1m commit.
+        fence = [
+            commit_record(
+                "rollup_1m", pending,
                 scraped=scraped, filtered=filtered, forwarded=forwarded,
             ),
-            observer=lambda n: self.manifest.record_event(
-                run_id, "commit_ok", f"rollup_1m:attempts={n}"
-            ),
-        )
-        # 1h/1d manifest rows (counters only — discovery keys on rollup_1m)
-        # land AFTER the fence: a crash between a tier commit and the fence
-        # would otherwise replay the chunk and double-count those tiers'
-        # 'forwarded'. The flip side — a crash right after the fence loses
-        # this run's 1h/1d counter rows — undercounts a crashed run's
-        # observability tally but never its data (both tiers' data writes
-        # precede the fence).
-        self.manifest.commit(run_id, pending, "rollup_1h", forwarded=fwd_1h)
-        self.manifest.commit(run_id, touched_days, "rollup_1d", forwarded=fwd_1d)
-        # late-data baseline: the per-chunk source row counts as of this
-        # commit (dirty_chunks replays a chunk when the live count drifts).
-        # Written after the fence — a crash in between leaves the chunk
-        # count-less and therefore dirty-once, which replays idempotently.
-        counts_df = (
-            pages.groupBy(F.date_trunc("hour", "warc_ts").alias("chunk_start"))
-            .agg(F.count("*").alias("n_pages"))
-        )
-        commit_with_retry(
-            lambda: self.store.write_chunks(counts_df, "chunk_counts", "chunk_start")
-        )
-        self.manifest.record_event(run_id, "run_complete", f"chunks={len(pending)}")
+            commit_record("rollup_1h", pending, forwarded=fwd_1h),
+            commit_record("rollup_1d", touched_days, forwarded=fwd_1d),
+            baseline_record({c: self._fingerprints[c] for c in pending}),
+            event_record("run_complete", f"chunks={len(pending)}"),
+        ]
+        commit_with_retry(lambda: self.manifest.commit(run_id, fence))
 
         points.unpersist()
         report.update(
@@ -484,13 +485,11 @@ class RollupJob:
         """Live gauges: pending-chunk count (beamium_directory_files,
         src/lib/asynch/fs.rs:17-26) + run/reload/commit event totals
         (beamium_reload_count, push_http_status analogues)."""
-        events = {
-            r["event"]: r["n"] for r in self.manifest.event_counts().collect()
-        }
+        events = self.manifest.event_counts()
         return {
             "pending_chunks": len(self.pending_chunks()),
             "runs_started": events.get("run_start", 0),
             "runs_completed": events.get("run_complete", 0),
             "reloads": events.get("reload", 0),
-            "commits_ok": events.get("commit_ok", 0),
+            "commits_ok": self.manifest.commits("rollup_1m"),
         }

@@ -8,8 +8,9 @@ src/conf.rs:329-336).
 
 Engine shape: cache the upstream points DataFrame once, run one filtered
 write per sink (predicate is Catalyst-native `rlike`, pushed into the
-cached scan), and commit the shared manifest row only after every sink
-write returns — the delete-after-all-writes semantic. On a cluster the
+cached scan), and land one fence segment with every sink's commit record
+only after every sink write returns — the delete-after-all-writes
+semantic. On a cluster the
 cache is a one-pass materialization; the per-sink writes are narrow
 filter+write jobs over it (no re-scan of raw data).
 """
@@ -20,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from beamium_spark.conf import EngineConf, SinkConf
-from beamium_spark.plans.checkpoint import commit_with_retry
+from beamium_spark.plans.checkpoint import commit_record, commit_with_retry
 
 
 def sink_filter(points: DataFrame, sink: SinkConf) -> DataFrame:
@@ -38,14 +39,16 @@ def route_multicast(
     manifest=None,
     run_id: str = "router",
     chunk_starts: list | None = None,
+    fence: list | None = None,
 ) -> dict:
     """Write one selector-filtered copy of ``points`` per configured sink.
 
     Applies the global labels first (router P3, src/router.rs:148-169).
-    Returns per-sink forwarded counts. The manifest commit (if given)
-    happens after ALL sink writes — beamium deletes the source file only
-    then (src/router.rs:86-104); a crash mid-way replays the whole route
-    pass idempotently.
+    Returns per-sink forwarded counts. The fence (if a manifest is given)
+    lands after ALL sink writes — beamium deletes the source file only
+    then (src/router.rs:86-104): one log segment with every sink's commit
+    record plus the caller's ``fence`` records; a crash mid-way replays
+    the whole route pass idempotently.
     """
     from beamium_spark.functions.labels import add_labels
 
@@ -82,10 +85,14 @@ def route_multicast(
             randomization=conf.parameters.backoff_randomization,
         )
         if manifest is not None and chunk_starts:
-            for sink in conf.sinks:
-                manifest.commit(
-                    run_id, chunk_starts, sink.table, forwarded=counts[sink.name]
-                )
+            manifest.commit(
+                run_id,
+                [
+                    commit_record(sink.table, chunk_starts, forwarded=counts[sink.name])
+                    for sink in conf.sinks
+                ]
+                + (fence or []),
+            )
         return counts
     finally:
         cached.unpersist()

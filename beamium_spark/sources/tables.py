@@ -1,8 +1,9 @@
-"""Table adapter: one seam for tier/manifest storage.
+"""Table adapter: one seam for tier storage and the checkpoint log's files.
 
 The engine's durable state mirrors beamium's two DFO directories
 (/root/reference/src/conf.rs:122-124): data chunks land under a tier
-table, lineage under a manifest table, and commits are idempotent
+table, lineage in the checkpoint log (``<root>/_log/``, small files the
+driver writes through this store), and commits are idempotent
 per-(chunk) overwrites so a killed job replays exactly the unforwarded
 chunks (README.md:6 "Disk Fail Over").
 
@@ -11,12 +12,16 @@ deletes, partition pruning over manifests); this sandbox has no Iceberg
 runtime jar, so ``ParquetTierStore`` implements the same contract on
 plain parquet directories:
 
-- chunk writes are **dynamic partition overwrites** on ``chunk_date`` —
+- chunk writes are **dynamic partition overwrites** on ``chunk_key`` —
   rewriting a chunk is idempotent, the exactly-once primitive;
-- TTL eviction deletes whole ``chunk_date=...`` partitions (the analogue
-  of Iceberg's partition-level delete, and of beamium's file unlink in
-  src/sink.rs:101-146);
-- predicate deletes rewrite only affected partitions.
+- TTL eviction unlinks whole ``chunk_key=...`` hour partitions and counts
+  their rows from the parquet footers (the analogue of Iceberg's
+  partition-level delete, and of beamium's file unlink in
+  src/sink.rs:101-146) — no Spark job;
+- predicate deletes rewrite only affected partitions;
+- small driver-side files (the checkpoint log, ``plans/checkpoint.py``)
+  are written ``.<name>.tmp`` then renamed, beamium's atomic mark
+  (src/scraper.rs:249-265).
 
 Every maintenance path (listing, TTL unlink, rewrite swap, compaction
 file counts) goes through the **Hadoop FileSystem API** resolved from
@@ -76,6 +81,75 @@ class ParquetTierStore:
     def _delete(self, path_str: str) -> bool:
         fs, p = self._fs_path(path_str)
         return bool(fs.exists(p)) and bool(fs.delete(p, True))
+
+    def list_files(self, root: str) -> list[tuple[str, int, int]]:
+        """[(path relative to ``root``, length, modification ms)] of every
+        data file under ``root``, recursively, skipping the names Spark's
+        file index hides (``_*`` and ``.*``, e.g. ``_SUCCESS`` and
+        checksum sidecars); [] if ``root`` is absent."""
+        fs, p = self._fs_path(root)
+        if not fs.exists(p):
+            return []
+        base = fs.makeQualified(p).toString().rstrip("/") + "/"
+        out = []
+        it = fs.listFiles(p, True)
+        while it.hasNext():
+            st = it.next()
+            rel = st.getPath().toString()[len(base):]
+            if not any(part[:1] in ("_", ".") for part in rel.split("/")):
+                out.append((rel, st.getLen(), st.getModificationTime()))
+        return sorted(out)
+
+    def read_bytes(self, path_str: str) -> bytes:
+        fs, p = self._fs_path(path_str)
+        stream = fs.open(p)
+        try:
+            return bytes(self.spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+        finally:
+            stream.close()
+
+    def write_bytes(self, path_str: str, data: bytes) -> None:
+        """Write a small file atomically: ``.<name>.tmp`` in the same
+        directory, then rename. A kill before the rename leaves only the
+        dot-file, which every reader skips."""
+        fs, dst = self._fs_path(path_str)
+        tmp = self.spark._jvm.org.apache.hadoop.fs.Path(
+            dst.getParent(), f".{dst.getName()}.tmp"
+        )
+        out = fs.create(tmp, True)
+        try:
+            out.write(bytearray(data))
+        finally:
+            out.close()
+        if not fs.rename(tmp, dst):
+            raise IOError(f"rename {tmp} -> {dst} failed on {fs.getUri()}")
+
+    def _parquet_rows(self, dir_str: str) -> int:
+        """Rows in the parquet files of one directory, from their footers."""
+        jvm = self.spark._jvm
+        conf = self.spark._jsc.hadoopConfiguration()
+        fs, p = self._fs_path(dir_str)
+        n = 0
+        for st in fs.listStatus(p):
+            if st.getPath().getName().endswith(".parquet"):
+                reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+                    jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
+                )
+                try:
+                    n += reader.getRecordCount()
+                finally:
+                    reader.close()
+        return n
+
+    def _drop_root_markers_if_empty(self, table: str) -> None:
+        """Once the last partition is gone, drop stray root files
+        (``_SUCCESS`` etc.) so ``exists()`` reports the table as absent."""
+        root = self.path(table)
+        entries = self._ls(root)
+        if not any(e.startswith("chunk_key=") for e, _ in entries):
+            for e, is_dir in entries:
+                if not is_dir:
+                    self._delete(f"{root}/{e}")
 
     def path(self, table: str) -> str:
         return f"{self.root}/{table}"
@@ -158,21 +232,35 @@ class ParquetTierStore:
             "partitionOverwriteMode", "dynamic"
         ).partitionBy(part_col).parquet(self.path(table))
 
-    def drop_partitions_older_than(self, table: str, cutoff_date: str) -> int:
-        """Partition-level TTL delete; returns partitions removed.
-        (Iceberg: ``DELETE FROM t WHERE chunk_date < cutoff`` prunes to
-        whole-file deletes the same way.)"""
-        p = self.path(table)
-        removed = 0
-        for d, is_dir in sorted(self._ls(p)):
-            if (
-                is_dir
-                and d.startswith("chunk_key=")
-                and d.split("=", 1)[1][:10] < cutoff_date
-            ):
-                self._delete(f"{p}/{d}")
-                removed += 1
-        return removed
+    def _keys_older_than(self, table: str, cutoff_key: str) -> list[str]:
+        return sorted(
+            d.split("=", 1)[1]
+            for d, is_dir in self._ls(self.path(table))
+            if is_dir and d.startswith("chunk_key=") and d.split("=", 1)[1] < cutoff_key
+        )
+
+    def rows_older_than(self, table: str, cutoff_key: str) -> int:
+        """Rows in the partitions ``drop_partitions_older_than`` would
+        drop, from the parquet footers. No data is read."""
+        root = self.path(table)
+        return sum(
+            self._parquet_rows(f"{root}/chunk_key={k}")
+            for k in self._keys_older_than(table, cutoff_key)
+        )
+
+    def drop_partitions_older_than(self, table: str, cutoff_key: str) -> int:
+        """Partition-level TTL delete: unlink every ``chunk_key=`` partition
+        whose key sorts before ``cutoff_key``, an hour key
+        ``yyyy-MM-dd-HH`` (a date ``yyyy-MM-dd`` cuts at its midnight).
+        Returns partitions removed. Listing only, no Spark job. (Iceberg:
+        ``DELETE FROM t WHERE chunk_key < cutoff`` prunes to whole-file
+        deletes the same way.)"""
+        keys = self._keys_older_than(table, cutoff_key)
+        for k in keys:
+            self._delete(f"{self.path(table)}/chunk_key={k}")
+        if keys:
+            self._drop_root_markers_if_empty(table)
+        return len(keys)
 
     def delete_where(self, table: str, predicate) -> int:
         """Row-level delete, pruned to the partitions that actually hold
@@ -220,14 +308,7 @@ class ParquetTierStore:
         affected.unpersist()
         for key in set(hit_keys) - keep_keys:
             self._delete(f"{self.path(table)}/chunk_key={key}")
-        # deleting the last partition leaves no data: drop stray root markers
-        # (_SUCCESS etc.) so exists() reports the table as absent
-        root = self.path(table)
-        entries = self._ls(root)
-        if not any(e.startswith("chunk_key=") for e, _ in entries):
-            for e, is_dir in entries:
-                if not is_dir:
-                    self._delete(f"{root}/{e}")
+        self._drop_root_markers_if_empty(table)
         return n
 
     def compact_chunks(self, table: str, chunks: list[str] | None = None) -> dict:
@@ -335,11 +416,20 @@ class IcebergTierStore:
     - ``write_chunks``  → ``overwritePartitions()`` on chunk_key — Iceberg's
       dynamic overwrite is snapshot-isolated, so the exactly-once replay
       story is strictly stronger than the parquet directory version;
-    - ``drop_partitions_older_than`` → metadata-only ``DELETE`` on the
-      chunk_key prefix (partition-level delete, no data read);
+    - ``drop_partitions_older_than`` → metadata-only ``DELETE`` of the
+      ``chunk_key`` partitions before an hour key (partition-level delete,
+      no data read), and ``rows_older_than`` → the ``.partitions``
+      metadata table's ``record_count``: together they make
+      ``retention.ttl_evict``;
     - ``delete_where`` → kept rows of affected partitions re-written via
       ``overwritePartitions`` + literal-list DELETE for emptied partitions
       (merge-on-read positional deletes would be the v2 alternative).
+
+    The checkpoint log (``plans/checkpoint.py``) is not a table: it lives
+    as small files under a Hadoop FileSystem state root, which
+    ``ParquetTierStore`` provides; the job and daemon keep it there.
+    These methods are jar-gated (``tests/test_iceberg.py`` skips without
+    the runtime), so they are untested here.
     """
 
     def __init__(self, spark: SparkSession, catalog: str, namespace: str):
@@ -426,20 +516,30 @@ class IcebergTierStore:
             "chunks": len(over),
         }
 
-    def drop_partitions_older_than(self, table: str, cutoff_date: str) -> int:  # pragma: no cover
+    def rows_older_than(self, table: str, cutoff_key: str) -> int:  # pragma: no cover
+        """Rows in the partitions before ``cutoff_key``, from the
+        ``.partitions`` metadata table."""
+        if not self.exists(table):
+            return 0
+        return int(self.spark.sql(
+            f"SELECT coalesce(sum(record_count), 0) AS n FROM {self._t(table)}.partitions "
+            f"WHERE partition.chunk_key < '{cutoff_key}'"
+        ).collect()[0]["n"])
+
+    def drop_partitions_older_than(self, table: str, cutoff_key: str) -> int:  # pragma: no cover
+        """Drop the partitions whose ``chunk_key`` sorts before the hour
+        key ``cutoff_key`` (``yyyy-MM-dd-HH``)."""
         if not self.exists(table):
             return 0
         t = self._t(table)
         n = self.spark.sql(
             f"SELECT count(DISTINCT chunk_key) AS n FROM {t} "
-            f"WHERE substring(chunk_key, 1, 10) < '{cutoff_date}'"
+            f"WHERE chunk_key < '{cutoff_key}'"
         ).collect()[0]["n"]
         if n:
             # aligned with partition boundaries → Iceberg plans this as a
             # metadata-only partition drop (no row rewrite)
-            self.spark.sql(
-                f"DELETE FROM {t} WHERE substring(chunk_key, 1, 10) < '{cutoff_date}'"
-            )
+            self.spark.sql(f"DELETE FROM {t} WHERE chunk_key < '{cutoff_key}'")
         return int(n)
 
     def delete_where(self, table: str, predicate) -> int:  # pragma: no cover

@@ -136,23 +136,27 @@ def test_kill_and_replay_equals_uninterrupted(spark, pages_path, tmp_path):
 
 
 def test_replay_after_data_write_without_manifest(spark, pages_path, tmp_path):
-    """Kill between tier write and manifest commit → chunk is replayed and
-    the idempotent overwrite leaves no duplicates."""
+    """Kill between tier write and fence → chunk is replayed and the
+    idempotent overwrite leaves no duplicates. The torn log is made
+    through the Manifest API: a hand-edited segment would fail its
+    ``.crc`` checksum on read."""
+    import datetime as dt
+
     conf = JobConf(bucket_mode="site", write_blocks=False)
     job = RollupJob(spark, pages_path, str(tmp_path / "s"), conf)
     job.run()
     ref_count = job.tier("rollup_1m").count()
 
-    # simulate the torn state: delete the last manifest commit for one chunk
-    manifest = job.manifest.read().cache()
-    victim = manifest.filter(F.col("tier") == "rollup_1m").orderBy("chunk_start").first()
-    trimmed = manifest.filter(
-        ~((F.col("tier") == "rollup_1m") & (F.col("chunk_start") == victim["chunk_start"]))
-    ).localCheckpoint()
-    job.store.drop("checkpoint_manifest")
-    job.store.append(trimmed, "checkpoint_manifest")
+    # simulate the torn state: drop the first chunk from the rollup_1m
+    # commit record of the fence segment
+    name, fence = job.manifest.segments()[-1]
+    c1m = next(r for r in fence["records"] if r.get("commit") == "rollup_1m")
+    victim = dt.datetime.fromisoformat(c1m["chunks"][0])
+    torn = [{**r, "chunks": r["chunks"][1:]} if r is c1m else r for r in fence["records"]]
+    job.store._delete(f"{job.manifest.root}/{name}")
+    job.manifest.commit(fence["run_id"], torn)
 
-    assert job.pending_chunks() == [victim["chunk_start"]]
+    assert job.pending_chunks() == [victim]
     job.run()
     assert job.tier("rollup_1m").count() == ref_count  # no dupes
     assert job.pending_chunks() == []
