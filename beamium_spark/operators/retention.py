@@ -8,23 +8,26 @@ incrementing ``beamium_skip_ttl`` / ``beamium_skip_max_size``
 (src/sink.rs:23-40).
 
 Engine mapping: a retention *policy* per tier — the 1m tier keeps hours,
-1h keeps days, 1d keeps forever — applied as partition-level deletes
-(TTL) and an oldest-first running-size cutoff (size cap). Both return the
-evicted count for the counters table.
+1h keeps days, 1d keeps forever. Both limits are a cutoff ``chunk_key``
+followed by one unlink of every hour partition before it: the TTL's
+cutoff is ``now − ttl``; the size cap's is the oldest partition that
+still fits when partitions are kept newest-first. Oldest-first eviction
+always removes a prefix of the key order, so the cap is just an earlier
+cutoff. Sizes are the partitions' parquet bytes on disk, as beamium sums
+the file sizes of its sink directory (earlier versions estimated 64 B
+per row, or summed encoded block lengths for ``blocks``). Both return
+the evicted counts for the counters table.
 
-Scale: TTL is a partition listing + directory unlink, with the evicted
-rows counted from the parquet footers (no data read, no Spark job); the
-size cap needs one global ordering of chunk sizes — computed over the
-*block accounting* (bytes per chunk), thousands of rows at 10^12-doc
-scale, never the data itself.
+Scale: a partition listing + directory unlinks, with the evicted rows
+counted from the parquet footers — no data read, no Spark job.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+#: the ``chunk_key`` format: one partition per UTC hour
+KEY_FORMAT = "%Y-%m-%d-%H"
 
 
 def ttl_cutoff_key(now_ts: str, ttl_hours: float) -> str:
@@ -40,7 +43,14 @@ def ttl_cutoff_key(now_ts: str, ttl_hours: float) -> str:
     hour = cutoff.replace(minute=0, second=0, microsecond=0)
     if hour < cutoff:
         hour += dt.timedelta(hours=1)
-    return hour.strftime("%Y-%m-%d-%H")
+    return hour.strftime(KEY_FORMAT)
+
+
+def _evict_before(store, table: str, cutoff_key: str) -> tuple[int, int]:
+    """The one eviction primitive: (partitions, rows) unlinked before
+    ``cutoff_key``, the rows counted from the footers first."""
+    rows = store.rows_older_than(table, cutoff_key)
+    return store.drop_partitions_older_than(table, cutoff_key), rows
 
 
 def ttl_evict(store, table: str, now_ts: str, ttl_hours: float) -> dict:
@@ -55,53 +65,35 @@ def ttl_evict(store, table: str, now_ts: str, ttl_hours: float) -> dict:
     episodes, daemon sinks), so each ``chunk_key=yyyy-MM-dd-HH``
     partition holds a single ``chunk_start`` and is either wholly
     expired or wholly kept. No Spark job runs."""
-    cutoff = ttl_cutoff_key(now_ts, ttl_hours)
-    rows = store.rows_older_than(table, cutoff)
-    parts = store.drop_partitions_older_than(table, cutoff)
+    parts, rows = _evict_before(store, table, ttl_cutoff_key(now_ts, ttl_hours))
     return {"expired_partitions": parts, "expired_rows": rows}
 
 
-def size_cap_plan(chunk_sizes: DataFrame, cap_bytes: int) -> DataFrame:
-    """chunk_sizes(chunk_start, bytes) → chunks to evict, oldest-first,
-    so that the retained total is ≤ cap (src/sink.rs:185-222 semantics:
-    evict oldest while over cap).
-
-    Running sum over newest-first ordering: a chunk is KEPT while the
-    cumulative bytes including it stay within cap.
-    """
-    w = Window.orderBy(F.desc("chunk_start")).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    return (
-        chunk_sizes.withColumn("running", F.sum("bytes").over(w))
-        .filter(F.col("running") > cap_bytes)
-        .select("chunk_start", "bytes")
-    )
+def size_cap_plan(sizes: dict[str, int], cap_bytes: int) -> list[str]:
+    """chunk_key → bytes, to the keys to evict, oldest first, so that
+    the kept total is ≤ cap (src/sink.rs:185-222: evict the oldest while
+    over cap). Walking newest-first, a partition is KEPT while the
+    running total including it stays within the cap; every older one is
+    evicted."""
+    kept = 0
+    keys = sorted(sizes, reverse=True)
+    for i, key in enumerate(keys):
+        kept += sizes[key]
+        if kept > cap_bytes:
+            return keys[i:][::-1]
+    return []
 
 
-def size_cap_evict(
-    store, table: str, cap_bytes: int, size_col: str | None = None,
-    size_expr=None,
-) -> dict:
-    """Apply the size cap to a stored tier/block table. Sizes come from the
-    table's own accounting (``size_col`` column name, or ``size_expr`` — a
-    Column like length(ts_block)+length(val_block) for Gorilla blocks),
-    else a fixed per-row estimate. Returns counters
-    (beamium_skip_max_size analogue)."""
-    if not store.exists(table):
-        return {"evicted_chunks": 0, "evicted_rows": 0}
-    df = store.read(table)
-    if size_expr is not None:
-        sizes = df.groupBy("chunk_start").agg(F.sum(size_expr).alias("bytes"))
-    elif size_col:
-        sizes = df.groupBy("chunk_start").agg(F.sum(size_col).alias("bytes"))
-    else:
-        sizes = df.groupBy("chunk_start").agg((F.count("*") * 64).alias("bytes"))
+def size_cap_evict(store, table: str, cap_bytes: int) -> dict:
+    """Apply the size cap to a stored table, measured in parquet bytes on
+    disk per partition. Evicts through the TTL's primitive, with the
+    hour after the newest doomed partition as the cutoff. Returns
+    counters (beamium_skip_max_size analogue). No Spark job runs."""
+    sizes = {k: nbytes for k, (_, nbytes) in store.partitions(table).items()}
     doomed = size_cap_plan(sizes, cap_bytes)
-    chunks = [r["chunk_start"] for r in doomed.collect()]
-    rows = 0
-    if chunks:
-        rows = store.delete_where(
-            table, F.col("chunk_start").isin(chunks)
-        )
-    return {"evicted_chunks": len(chunks), "evicted_rows": rows}
+    if not doomed:
+        return {"evicted_chunks": 0, "evicted_rows": 0}
+    newest = dt.datetime.strptime(doomed[-1], KEY_FORMAT)
+    cutoff = (newest + dt.timedelta(hours=1)).strftime(KEY_FORMAT)
+    parts, rows = _evict_before(store, table, cutoff)
+    return {"evicted_chunks": parts, "evicted_rows": rows}

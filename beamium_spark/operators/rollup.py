@@ -39,6 +39,28 @@ TIERS = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}
 TUPLE_COLS = ("cnt", "sum_value", "min_value", "max_value")
 
 
+def value_tuple(value: str = "value") -> list[Column]:
+    """The tuple of a value column: the aggregates that build ``TUPLE_COLS``
+    from raw points."""
+    return [
+        F.count(value).alias("cnt"),
+        F.sum(value).alias("sum_value"),
+        F.min(value).alias("min_value"),
+        F.max(value).alias("max_value"),
+    ]
+
+
+def merge_tuples() -> list[Column]:
+    """The merge of tuples: the aggregates that combine ``TUPLE_COLS`` rows
+    into one (sums of counts and sums, min of mins, max of maxes)."""
+    return [
+        F.sum("cnt").alias("cnt"),
+        F.sum("sum_value").alias("sum_value"),
+        F.min("min_value").alias("min_value"),
+        F.max("max_value").alias("max_value"),
+    ]
+
+
 def window_start(ts, window: str):
     """Tumbling-window start: bit-identical to ``F.window(ts, window).start``
     (epoch-aligned floor, pmod handles pre-epoch timestamps exactly like
@@ -74,12 +96,7 @@ def rollup_tier(
     return (
         points.where(F.col(ts_col).isNotNull())
         .groupBy("bucket", "metric", *extra_keys, ws.alias("window_start"))
-        .agg(
-            F.count("value").alias("cnt"),
-            F.sum("value").alias("sum_value"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-        )
+        .agg(*value_tuple())
         .select(
             "bucket",
             "metric",
@@ -104,12 +121,7 @@ def rollup_cascade(lower_tier: DataFrame, window: str) -> DataFrame:
     return (
         lower_tier
         .groupBy("bucket", "metric", ws.alias("window_start"))
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum_value").alias("sum_value"),
-            F.min("min_value").alias("min_value"),
-            F.max("max_value").alias("max_value"),
-        )
+        .agg(*merge_tuples())
         .select("bucket", "metric", "window_start", *TUPLE_COLS)
     )
 
@@ -140,21 +152,11 @@ def rollup_tier_salted(
     stage1 = (
         salted.where(F.col(ts_col).isNotNull())
         .groupBy("bucket", "metric", "__salt", ws.alias("window_start"))
-        .agg(
-            F.count("value").alias("cnt"),
-            F.sum("value").alias("sum_value"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-        )
+        .agg(*value_tuple())
     )
     return (
         stage1.groupBy("bucket", "metric", "window_start")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum_value").alias("sum_value"),
-            F.min("min_value").alias("min_value"),
-            F.max("max_value").alias("max_value"),
-        )
+        .agg(*merge_tuples())
         .select("bucket", "metric", "window_start", *TUPLE_COLS)
     )
 
@@ -163,16 +165,6 @@ def with_avg(tier: DataFrame) -> DataFrame:
     """avg is always derived sum/cnt — kept out of storage so tuples stay
     decomposable across cascades."""
     return tier.withColumn("avg_value", F.col("sum_value") / F.col("cnt"))
-
-
-def repartition_for_write(tier: DataFrame, n_partitions: int, chunk: str = "1 hour") -> DataFrame:
-    """Explicit (bucket, chunk) output partitioning (north_rule): one
-    shuffle keyed on the layout downstream reads use, analogue of
-    beamium's per-(scraper, batch) file naming (src/scraper.rs:243)."""
-    chunked = tier.withColumn(
-        "chunk_start", F.date_trunc("hour" if chunk == "1 hour" else "day", "window_start")
-    )
-    return chunked.repartition(n_partitions, "bucket", "chunk_start")
 
 
 def rollup_percentiles(
@@ -877,20 +869,9 @@ def tier_sum_metrics(
     return (
         tier.filter(F.col("metric").rlike(f"^(?:{pattern})$"))
         .groupBy("bucket", "window_start")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum_value").alias("sum_value"),
-            F.min("min_value").alias("min_value"),
-            F.max("max_value").alias("max_value"),
-        )
+        .agg(*merge_tuples())
         .select(
-            "bucket",
-            F.lit(out_metric).alias("metric"),
-            "window_start",
-            "cnt",
-            "sum_value",
-            "min_value",
-            "max_value",
+            "bucket", F.lit(out_metric).alias("metric"), "window_start", *TUPLE_COLS
         )
     )
 
@@ -1180,6 +1161,31 @@ def alert_episodes(
             (F.col("n_windows") >= for_windows).alias("fired"),
         )
     )
+
+
+def day_alert_episodes(tier: DataFrame, days, rules) -> DataFrame:
+    """Alert episodes of every rule (``plans.job.AlertRule``) over the 1m
+    ``tier``, each day of ``days`` evaluated INDEPENDENTLY, with a
+    ``rule`` label column and ``chunk_start`` set to the episode's day.
+    The day is the overwrite unit of the alerts table, so whichever pass
+    recomputes a day — a job tick or a streaming epoch — writes identical
+    episodes (streaks reset at midnight by contract)."""
+    eps = None
+    for d in days:
+        day = tier.filter(F.to_date("window_start") == d)
+        for rule in rules:
+            a = tier_alert_rule(
+                day.filter(F.col("metric").rlike(f"^(?:{rule.metric})$")),
+                rule.threshold,
+                rule.op,
+                rule.for_windows,
+                "1 minute",
+            )
+            e = alert_episodes(a, rule.for_windows, "1 minute").withColumn(
+                "rule", F.lit(rule.label)
+            )
+            eps = e if eps is None else eps.unionByName(e)
+    return eps.withColumn("chunk_start", F.date_trunc("day", "episode_start"))
 
 
 def tier_anomalies_robust(

@@ -20,8 +20,9 @@ eviction, and a config change restarts everything from on-disk state.
   committed chunks whose point count drifted from the baseline (a crash
   mid-route replays the chunk into all sinks idempotently — dynamic
   partition overwrite);
-- per-sink retention applies the sink's ``ttl``/``size`` caps
-  (K4/K5, src/sink.rs:101-222);
+- per-sink retention maps the sink's ``ttl``/``size`` to a
+  ``RetentionPolicy`` and runs the job's own retention pass (K4/K5,
+  src/sink.rs:101-222); ``size`` is parquet bytes on disk;
 - ``conf.watch_and_rerun`` + ``record_reload`` give the 2s-debounced hot
   reload (src/main.rs:148-205): state lives in the store, so a restarted
   daemon resumes exactly where the old one stopped.
@@ -40,13 +41,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from beamium_spark.conf import EngineConf, ScraperConf
-from beamium_spark.operators.retention import size_cap_evict, ttl_evict
 from beamium_spark.plans.checkpoint import (
     Manifest,
     baseline_record,
     event_record,
     new_run_id,
 )
+from beamium_spark.plans.job import RetentionPolicy, compaction_pass, retention_pass
 from beamium_spark.plans.router import route_multicast
 from beamium_spark.sources.tables import ParquetTierStore
 
@@ -149,33 +150,24 @@ class ScrapeDaemon:
     # ---- retention (K4/K5 per sink conf) -----------------------------------
 
     def apply_retention(self, now_ts: str) -> dict:
-        out: dict = {}
-        for sink in self.conf.sinks:
-            if not self.store.exists(sink.table):
-                continue
-            r: dict = {}
-            if sink.ttl_hours:
-                # fractional hours pass through untruncated: a 30m ttl must
-                # evict at now-30m, not at now (int() would wipe the table)
-                r.update(ttl_evict(self.store, sink.table, now_ts, sink.ttl_hours))
-            if sink.size_bytes:
-                r.update(size_cap_evict(self.store, sink.table, sink.size_bytes))
-            out[sink.table] = r
-        return out
+        # a 0 ttl or size turns that limit off; fractional hours pass
+        # through untruncated (a 30m ttl evicts at now-30m)
+        policies = {
+            sink.table: RetentionPolicy(
+                ttl_hours=sink.ttl_hours or None, cap_bytes=sink.size_bytes or None
+            )
+            for sink in self.conf.sinks
+        }
+        return retention_pass(self.store, policies, now_ts)
 
     def compact_if_needed(self) -> dict:
-        """Per-tick incremental compaction over every sink table: chunks
-        whose file count exceeds ``parameters.max_files_per_chunk`` are
-        rewritten (each tick's dynamic-overwrite/append leaves new files
-        per touched chunk — unbounded over a daemon's lifetime without
-        this). Returns {table: compact report} for tables that compacted."""
-        n = self.conf.parameters.max_files_per_chunk
-        out: dict = {}
-        for sink in self.conf.sinks:
-            r = self.store.compact_if_over(sink.table, n)
-            if r:
-                out[sink.table] = r
-        return out
+        """Compaction over every sink table, with the threshold from
+        ``parameters.max_files_per_chunk``."""
+        return compaction_pass(
+            self.store,
+            [sink.table for sink in self.conf.sinks],
+            self.conf.parameters.max_files_per_chunk,
+        )
 
     def record_reload(self) -> None:
         self.manifest.record_event(new_run_id(), "reload")

@@ -17,7 +17,9 @@ One ``run()`` is a micro-batch pass (beamium's scrape tick,
    data is read exactly once, by the 1m pass);
 4. the fence: one log segment with the 1m/1h/1d commit records, the
    chunks' source-file baseline and ``run_complete``;
-5. retention pass per tier policy (TTL / size cap).
+5. retention and compaction: ``retention_pass`` and ``compaction_pass``,
+   shared with the scrape daemon (TTL and size cap, both partition
+   unlinks before a cutoff key).
 
 Kill the driver at any point: data writes are per-chunk idempotent
 overwrites and the fence lands only after the writes, so a rerun replays
@@ -45,7 +47,12 @@ from pyspark.sql import types as T
 from beamium_spark.operators.blocks import encode_blocks
 from beamium_spark.operators.extract import extract_points
 from beamium_spark.operators.retention import size_cap_evict, ttl_evict
-from beamium_spark.operators.rollup import rollup_cascade, rollup_tier, rollup_tier_salted
+from beamium_spark.operators.rollup import (
+    day_alert_episodes,
+    rollup_cascade,
+    rollup_tier,
+    rollup_tier_salted,
+)
 from beamium_spark.plans.checkpoint import (
     Manifest,
     baseline_record,
@@ -71,8 +78,20 @@ PAGES_SCHEMA = T.StructType(
 )
 
 
+#: per-tick incremental compaction: chunks exceeding this many parquet
+#: files get rewritten after retention
+MAX_FILES_PER_CHUNK = 8
+
+
 @dataclass
 class RetentionPolicy:
+    """A table's limits: rows older than ``ttl_hours`` expire, and the
+    oldest hour partitions go while the table's parquet bytes on disk
+    exceed ``cap_bytes`` (beamium's sink directory size). ``None`` turns
+    a limit off. Earlier versions measured the cap as 64 B per row, or
+    encoded block lengths for ``blocks``, so a store near its cap now
+    evicts differently."""
+
     ttl_hours: float | None = None
     cap_bytes: int | None = None
 
@@ -101,11 +120,8 @@ class JobConf:
     """Engine config; defaults echo the reference's capacity constants
     (SURVEY.md §6)."""
 
-    n_buckets: int = 64
     bucket_mode: str = "hash"
     salt_factor: int = 0  # 0 = unsalted; >0 = two-stage skew-resistant agg
-    static_labels: dict = field(default_factory=dict)
-    drop_label_keys: list = field(default_factory=list)
     metric_whitelist: str | None = None
     write_blocks: bool = True
     # when set, the job also maintains a 1h fixed-width value-histogram
@@ -116,9 +132,6 @@ class JobConf:
     # tier ("distinct_1h" — DataSketches sketch column at this lgK);
     # query(stat='distinct') unions it to any step without raw pages
     distinct_lgk: int | None = None
-    # per-tick incremental compaction: chunks exceeding this many parquet
-    # files get rewritten after retention (0 = off)
-    max_files_per_chunk: int = 8
     # per-tick alert-rule evaluation (list of AlertRule): episodes land
     # in the 'alerts' table, evaluated PER TOUCHED DAY so replays are
     # deterministic regardless of which tick recomputes a day (streaks
@@ -242,10 +255,7 @@ class RollupJob:
         pages = source.filter(in_pending)
         points = extract_points(
             pages,
-            n_buckets=self.conf.n_buckets,
             bucket_mode=self.conf.bucket_mode,
-            static_labels=self.conf.static_labels,
-            drop_label_keys=self.conf.drop_label_keys,
             metric_whitelist=self.conf.metric_whitelist,
         ).cache()
         # exact counter triple (north_star scraped/filtered/forwarded):
@@ -357,28 +367,9 @@ class RollupJob:
         fwd_1d = self._write_tier_data(t1d, "rollup_1d")
 
         if self.conf.alert_rules:
-            from beamium_spark.operators.rollup import alert_episodes, tier_alert_rule
-
-            # evaluate each touched day INDEPENDENTLY: the day is the
-            # overwrite unit, so whichever tick recomputes it produces
-            # identical episodes (streaks reset at midnight by contract)
-            t1m_stored = self.store.read("rollup_1m")
-            eps = None
-            for d in touched_dates:
-                day = t1m_stored.filter(F.to_date("window_start") == d)
-                for rule in self.conf.alert_rules:
-                    a = tier_alert_rule(
-                        day.filter(F.col("metric").rlike(f"^(?:{rule.metric})$")),
-                        rule.threshold,
-                        rule.op,
-                        rule.for_windows,
-                        "1 minute",
-                    )
-                    e = alert_episodes(a, rule.for_windows, "1 minute").withColumn(
-                        "rule", F.lit(rule.label)
-                    )
-                    eps = e if eps is None else eps.unionByName(e)
-            eps = eps.withColumn("chunk_start", F.date_trunc("day", "episode_start"))
+            eps = day_alert_episodes(
+                self.store.read("rollup_1m"), touched_dates, self.conf.alert_rules
+            )
             commit_with_retry(
                 lambda: self.store.write_chunks(eps, "alerts", "chunk_start")
             )
@@ -434,38 +425,10 @@ class RollupJob:
     # ---- retention -------------------------------------------------------
 
     def apply_retention(self, now_ts: str) -> dict:
-        out = {}
-        for table, pol in self.conf.retention.items():
-            if pol.ttl_hours is not None and self.store.exists(table):
-                out[table] = ttl_evict(self.store, table, now_ts, pol.ttl_hours)
-            if pol.cap_bytes is not None and self.store.exists(table):
-                # blocks carry their own byte accounting (encoded block
-                # lengths) — the size cap uses it instead of row estimates
-                size_expr = (
-                    F.length("ts_block") + F.length("val_block")
-                    if table == "blocks"
-                    else None
-                )
-                out.setdefault(table, {}).update(
-                    size_cap_evict(
-                        self.store, table, pol.cap_bytes, size_expr=size_expr
-                    )
-                )
-        return out
+        return retention_pass(self.store, self.conf.retention, now_ts)
 
     def compact_if_needed(self) -> dict:
-        """Per-tick incremental compaction over every retained table:
-        chunks exceeding ``conf.max_files_per_chunk`` parquet files are
-        rewritten (incremental passes and dirty-chunk replays leave new
-        files per touched chunk every tick; a long-lived job's file count
-        is otherwise unbounded, and file count — not bytes — is what
-        blows up listing/planning at 10^5+ chunks)."""
-        out: dict = {}
-        for table in self.conf.retention:
-            r = self.store.compact_if_over(table, self.conf.max_files_per_chunk)
-            if r:
-                out[table] = r
-        return out
+        return compaction_pass(self.store, self.conf.retention, MAX_FILES_PER_CHUNK)
 
     # ---- readback --------------------------------------------------------
 
@@ -493,3 +456,40 @@ class RollupJob:
             "reloads": events.get("reload", 0),
             "commits_ok": self.manifest.commits("rollup_1m"),
         }
+
+
+# ---- the retention and compaction passes both drivers share ---------------
+
+
+def retention_pass(store, policies: dict, now_ts: str) -> dict:
+    """Apply each table's ``RetentionPolicy``: the TTL, then the size cap
+    (beamium's sink scanner, src/sink.rs:101-222). Both unlink whole hour
+    partitions before a cutoff key, decided from a partition listing, so
+    the pass starts no Spark job. Returns {table: counters} for the
+    tables that have a limit and exist."""
+    out: dict = {}
+    for table, pol in policies.items():
+        if pol == RetentionPolicy() or not store.exists(table):
+            continue
+        r = out[table] = {}
+        if pol.ttl_hours is not None:
+            r.update(ttl_evict(store, table, now_ts, pol.ttl_hours))
+        if pol.cap_bytes is not None:
+            r.update(size_cap_evict(store, table, pol.cap_bytes))
+    return out
+
+
+def compaction_pass(store, tables, max_files_per_chunk: int) -> dict:
+    """Per-tick incremental compaction: in each table, the chunks with
+    more than ``max_files_per_chunk`` parquet files are rewritten (``<= 0``
+    disables). Incremental passes and dirty-chunk replays leave new files
+    per touched chunk every tick; a long-lived store's file count is
+    otherwise unbounded, and file count — not bytes — is what blows up
+    listing/planning at 10^5+ chunks. Returns {table: compact report} for
+    the tables that compacted."""
+    out: dict = {}
+    for table in tables:
+        r = store.compact_if_over(table, max_files_per_chunk)
+        if r:
+            out[table] = r
+    return out

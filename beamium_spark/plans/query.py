@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from beamium_spark.operators.rollup import (
     histogram_quantile,
+    merge_tuples,
     session_rollup,
     tier_alert_rule,
     tier_anomalies,
@@ -368,12 +369,7 @@ def query(
     t = _read_range(store, tier_name, start, end, metric, bucket)
     re_rolled = (
         t.groupBy("bucket", "metric", window_start("window_start", step_w).alias("window_start"))
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum_value").alias("sum_value"),
-            F.min("min_value").alias("min_value"),
-            F.max("max_value").alias("max_value"),
-        )
+        .agg(*merge_tuples())
     )
     if fill is not None:
         from beamium_spark.operators.gapfill import gapfill

@@ -25,6 +25,13 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
     ``shuffle_partitions`` defaults to the core count — on a real cluster
     this should be ~2-3x total executor cores instead.
+
+    The UTC session time zone set here is a requirement of the engine,
+    not a tuning choice: the hour chunk keys (``date_trunc("hour", ...)``,
+    ``to_date`` and the ``chunk_key`` partition names) and
+    ``decode_blocks``' naive pandas timestamps follow the session time
+    zone, so a session in another zone shifts every hour. Nothing checks
+    it; a host application's session must set it too.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     mem = os.environ.get("BEAMIUM_SPARK_DRIVER_MEM", "16g")

@@ -14,11 +14,15 @@ plain parquet directories:
 
 - chunk writes are **dynamic partition overwrites** on ``chunk_key`` —
   rewriting a chunk is idempotent, the exactly-once primitive;
-- TTL eviction unlinks whole ``chunk_key=...`` hour partitions and counts
-  their rows from the parquet footers (the analogue of Iceberg's
-  partition-level delete, and of beamium's file unlink in
-  src/sink.rs:101-146) — no Spark job;
-- predicate deletes rewrite only affected partitions;
+- ``partitions`` lists every ``chunk_key=...`` hour partition once with
+  its parquet file count and on-disk bytes;
+- eviction, TTL and size cap alike, unlinks whole partitions before a
+  cutoff key and counts their rows from the parquet footers (the
+  analogue of Iceberg's partition-level delete, and of beamium's file
+  unlink in src/sink.rs:101-146) — no Spark job. A size cap is measured
+  in parquet bytes on disk, as beamium measures its sink directory;
+- predicate deletes (``delete_where``) rewrite only affected partitions;
+  no retention path uses them;
 - small driver-side files (the checkpoint log, ``plans/checkpoint.py``)
   are written ``.<name>.tmp`` then renamed, beamium's atomic mark
   (src/scraper.rs:249-265).
@@ -57,6 +61,13 @@ class ParquetTierStore:
         self.spark = spark
         self.root = root.rstrip("/")
         self.max_records_per_file = max_records_per_file
+        # Py4J resolves a JVM class name one package segment at a time, a
+        # round trip each: resolve the control plane's classes once
+        jvm = spark._jvm
+        self._Path = jvm.org.apache.hadoop.fs.Path
+        self._ParquetFileReader = jvm.org.apache.parquet.hadoop.ParquetFileReader
+        self._HadoopInputFile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile
+        self._hconf = spark._jsc.hadoopConfiguration()
         fs, p = self._fs_path(self.root)
         fs.mkdirs(p)
 
@@ -64,10 +75,8 @@ class ParquetTierStore:
     # directory ops are per-chunk, never per-row) -------------------------
 
     def _fs_path(self, path_str: str):
-        jvm = self.spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path_str)
-        fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return fs, p
+        p = self._Path(path_str)
+        return p.getFileSystem(self._hconf), p
 
     def _ls(self, path_str: str) -> list[tuple[str, bool]]:
         """[(child name, is_dir)] of the direct children; [] if absent."""
@@ -86,18 +95,27 @@ class ParquetTierStore:
         """[(path relative to ``root``, length, modification ms)] of every
         data file under ``root``, recursively, skipping the names Spark's
         file index hides (``_*`` and ``.*``, e.g. ``_SUCCESS`` and
-        checksum sidecars); [] if ``root`` is absent."""
+        checksum sidecars); [] if ``root`` is absent.
+
+        Walks ``listStatus`` level by level rather than the recursive
+        ``listFiles``: the latter builds a ``LocatedFileStatus`` per file,
+        which on the local filesystem forks a process to read the file's
+        permissions (tens of ms per file)."""
         fs, p = self._fs_path(root)
         if not fs.exists(p):
             return []
-        base = fs.makeQualified(p).toString().rstrip("/") + "/"
         out = []
-        it = fs.listFiles(p, True)
-        while it.hasNext():
-            st = it.next()
-            rel = st.getPath().toString()[len(base):]
-            if not any(part[:1] in ("_", ".") for part in rel.split("/")):
-                out.append((rel, st.getLen(), st.getModificationTime()))
+        todo = [("", p)]
+        while todo:
+            prefix, d = todo.pop()
+            for st in fs.listStatus(d):
+                name = st.getPath().getName()
+                if name[:1] in ("_", "."):
+                    continue
+                if st.isDirectory():
+                    todo.append((f"{prefix}{name}/", st.getPath()))
+                else:
+                    out.append((prefix + name, st.getLen(), st.getModificationTime()))
         return sorted(out)
 
     def read_bytes(self, path_str: str) -> bytes:
@@ -113,9 +131,7 @@ class ParquetTierStore:
         directory, then rename. A kill before the rename leaves only the
         dot-file, which every reader skips."""
         fs, dst = self._fs_path(path_str)
-        tmp = self.spark._jvm.org.apache.hadoop.fs.Path(
-            dst.getParent(), f".{dst.getName()}.tmp"
-        )
+        tmp = self._Path(dst.getParent(), f".{dst.getName()}.tmp")
         out = fs.create(tmp, True)
         try:
             out.write(bytearray(data))
@@ -126,14 +142,12 @@ class ParquetTierStore:
 
     def _parquet_rows(self, dir_str: str) -> int:
         """Rows in the parquet files of one directory, from their footers."""
-        jvm = self.spark._jvm
-        conf = self.spark._jsc.hadoopConfiguration()
         fs, p = self._fs_path(dir_str)
         n = 0
         for st in fs.listStatus(p):
             if st.getPath().getName().endswith(".parquet"):
-                reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
-                    jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
+                reader = self._ParquetFileReader.open(
+                    self._HadoopInputFile.fromStatus(st, self._hconf)
                 )
                 try:
                     n += reader.getRecordCount()
@@ -232,12 +246,22 @@ class ParquetTierStore:
             "partitionOverwriteMode", "dynamic"
         ).partitionBy(part_col).parquet(self.path(table))
 
+    def partitions(self, table: str) -> dict[str, tuple[int, int]]:
+        """chunk_key → (parquet files, on-disk bytes) of every
+        ``chunk_key=`` partition, in key order, from one recursive
+        listing. No data is read and no Spark job runs: retention and
+        compaction decide from this alone."""
+        out: dict[str, tuple[int, int]] = {}
+        for rel, size, _ in self.list_files(self.path(table)):
+            part, _, name = rel.partition("/")
+            if part.startswith("chunk_key=") and name.endswith(".parquet"):
+                key = part[len("chunk_key="):]
+                files, nbytes = out.get(key, (0, 0))
+                out[key] = (files + 1, nbytes + size)
+        return out
+
     def _keys_older_than(self, table: str, cutoff_key: str) -> list[str]:
-        return sorted(
-            d.split("=", 1)[1]
-            for d, is_dir in self._ls(self.path(table))
-            if is_dir and d.startswith("chunk_key=") and d.split("=", 1)[1] < cutoff_key
-        )
+        return [k for k in self.partitions(table) if k < cutoff_key]
 
     def rows_older_than(self, table: str, cutoff_key: str) -> int:
         """Rows in the partitions ``drop_partitions_older_than`` would
@@ -330,18 +354,10 @@ class ParquetTierStore:
             return {"files_before": 0, "files_after": 0, "chunks": 0}
 
         def _count_files(keys):
-            n = 0
-            for d, is_dir in self._ls(root):
-                if (
-                    is_dir
-                    and d.startswith("chunk_key=")
-                    and (keys is None or d.split("=", 1)[1] in keys)
-                ):
-                    n += sum(
-                        1 for f, _ in self._ls(f"{root}/{d}")
-                        if f.endswith(".parquet")
-                    )
-            return n
+            return sum(
+                files for k, (files, _) in self.partitions(table).items()
+                if keys is None or k in keys
+            )
 
         keys = set(chunks) if chunks is not None else None
         before = _count_files(keys)
@@ -363,9 +379,7 @@ class ParquetTierStore:
         finally:
             df.unpersist()
         after = _count_files(keys)
-        n_chunks = len(keys) if keys is not None else sum(
-            1 for d, _ in self._ls(root) if d.startswith("chunk_key=")
-        )
+        n_chunks = len(keys) if keys is not None else len(self.partitions(table))
         return {"files_before": before, "files_after": after, "chunks": n_chunks}
 
     def compact_if_over(self, table: str, max_files_per_chunk: int) -> dict:
@@ -390,15 +404,7 @@ class ParquetTierStore:
 
     def chunk_file_counts(self, table: str) -> dict[str, int]:
         """chunk_key → parquet file count (the compaction trigger metric)."""
-        root = self.path(table)
-        out: dict[str, int] = {}
-        for d, is_dir in self._ls(root):
-            if is_dir and d.startswith("chunk_key="):
-                out[d.split("=", 1)[1]] = sum(
-                    1 for f, _ in self._ls(f"{root}/{d}")
-                    if f.endswith(".parquet")
-                )
-        return out
+        return {k: files for k, (files, _) in self.partitions(table).items()}
 
     def drop(self, table: str) -> None:
         self._delete(self.path(table))
@@ -420,7 +426,10 @@ class IcebergTierStore:
       ``chunk_key`` partitions before an hour key (partition-level delete,
       no data read), and ``rows_older_than`` → the ``.partitions``
       metadata table's ``record_count``: together they make
-      ``retention.ttl_evict``;
+      ``retention.ttl_evict`` and ``retention.size_cap_evict``;
+    - ``partitions`` → per-partition file counts and bytes from the
+      ``.files`` metadata table (the size cap's and the compaction
+      trigger's input);
     - ``delete_where`` → kept rows of affected partitions re-written via
       ``overwritePartitions`` + literal-list DELETE for emptied partitions
       (merge-on-read positional deletes would be the v2 alternative).
@@ -481,16 +490,22 @@ class IcebergTierStore:
         else:
             df.writeTo(self._t(table)).partitionedBy(F.col(part_col)).create()
 
-    def chunk_file_counts(self, table: str) -> dict[str, int]:  # pragma: no cover
-        """chunk_key → data-file count from the ``.files`` metadata table
-        (no data read — the compaction trigger stays metadata-only)."""
+    def partitions(self, table: str) -> dict[str, tuple[int, int]]:  # pragma: no cover
+        """chunk_key → (data files, bytes) from the ``.files`` metadata
+        table, in key order (no data read — retention and the compaction
+        trigger stay metadata-only)."""
         if not self.exists(table):
             return {}
         rows = self.spark.sql(
-            f"SELECT partition.chunk_key AS k, count(*) AS n "
-            f"FROM {self._t(table)}.files GROUP BY partition.chunk_key"
+            f"SELECT partition.chunk_key AS k, count(*) AS n, "
+            f"sum(file_size_in_bytes) AS b FROM {self._t(table)}.files "
+            f"WHERE content = 0 GROUP BY partition.chunk_key ORDER BY k"
         ).collect()
-        return {r["k"]: r["n"] for r in rows}
+        return {r["k"]: (r["n"], r["b"]) for r in rows}
+
+    def chunk_file_counts(self, table: str) -> dict[str, int]:  # pragma: no cover
+        """chunk_key → data-file count (the compaction trigger metric)."""
+        return {k: files for k, (files, _) in self.partitions(table).items()}
 
     def compact_if_over(self, table: str, max_files_per_chunk: int) -> dict:  # pragma: no cover
         """Incremental compaction trigger — same contract as the parquet

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from beamium_spark.operators.rollup import TUPLE_COLS, day_alert_episodes, value_tuple
 from beamium_spark.plans.job import PAGES_SCHEMA
 
 
@@ -54,21 +55,8 @@ def streaming_rollup_1m(
     return (
         points.withWatermark("ts", watermark)
         .groupBy("bucket", "metric", F.window("ts", "1 minute").alias("w"))
-        .agg(
-            F.count("value").alias("cnt"),
-            F.sum("value").alias("sum_value"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-        )
-        .select(
-            "bucket",
-            "metric",
-            F.col("w.start").alias("window_start"),
-            "cnt",
-            "sum_value",
-            "min_value",
-            "max_value",
-        )
+        .agg(*value_tuple())
+        .select("bucket", "metric", F.col("w.start").alias("window_start"), *TUPLE_COLS)
     )
 
 
@@ -133,36 +121,13 @@ def epoch_fenced_sink(
         ).withColumn("epoch_id", F.lit(int(epoch_id)))
         store.overwrite_partition(out, table, "epoch_id")
         if alert_rules:
-            from beamium_spark.operators.rollup import (
-                alert_episodes,
-                tier_alert_rule,
-            )
-
             days = [
                 r["d"]
                 for r in out.select(
                     F.to_date("window_start").alias("d")
                 ).distinct().collect()
             ]
-            tier = store.read(table)
-            eps = None
-            for d in days:
-                day = tier.filter(F.to_date("window_start") == d)
-                for rule in alert_rules:
-                    a = tier_alert_rule(
-                        day.filter(F.col("metric").rlike(f"^(?:{rule.metric})$")),
-                        rule.threshold,
-                        rule.op,
-                        rule.for_windows,
-                        "1 minute",
-                    )
-                    e = alert_episodes(a, rule.for_windows, "1 minute").withColumn(
-                        "rule", F.lit(rule.label)
-                    )
-                    eps = e if eps is None else eps.unionByName(e)
-            eps = eps.withColumn(
-                "chunk_start", F.date_trunc("day", "episode_start")
-            )
+            eps = day_alert_episodes(store.read(table), days, alert_rules)
             store.write_chunks(eps, alerts_table, "chunk_start")
 
     return _sink
@@ -277,16 +242,11 @@ def streaming_gts_rollup_1m(points_stream: DataFrame, watermark: str = "10 minut
         points_stream.withColumn("labels_s", labels_sorted_str(F.col("labels")))
         .withWatermark("ts", watermark)
         .groupBy("metric", "labels_s", F.window("ts", "1 minute").alias("w"))
-        .agg(
-            F.count("value").alias("cnt"),
-            F.sum("value").alias("sum_value"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-        )
+        .agg(*value_tuple())
         .select(
             "metric",
             "labels_s",
             F.col("w.start").alias("window_start"),
-            "cnt", "sum_value", "min_value", "max_value",
+            *TUPLE_COLS,
         )
     )

@@ -1,7 +1,7 @@
 """The control plane runs on the driver and is exact: discovery by source
-file, the checkpoint log, and TTL by partition listing launch no Spark
-job once the source is known, and each replays or evicts exactly what
-it should."""
+file, the checkpoint log, and retention (TTL and size cap) by partition
+listing launch no Spark job once the source is known, and each replays
+or evicts exactly what it should."""
 
 import datetime as dt
 import os
@@ -14,7 +14,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from beamium_spark.operators.retention import ttl_evict
-from beamium_spark.plans.job import AlertRule, JobConf, RollupJob
+from beamium_spark.plans.job import AlertRule, JobConf, RetentionPolicy, RollupJob
 from beamium_spark.sources.synth import ensure_web_pages
 
 
@@ -210,3 +210,71 @@ def test_fractional_ttl_evicts_exactly(spark, full_state, tmp_path):
         assert ttl_evict(store, table, now, ttl) == {
             "expired_partitions": 0, "expired_rows": 0
         }
+
+
+def test_size_cap_evicts_oldest_partitions_exactly(spark, full_state, tmp_path):
+    """Caps on rollup_1h and blocks that evict some partitions but not
+    all: no Spark job, an oldest-first prefix of the keys, the kept
+    on-disk bytes within the cap but not with the newest evicted
+    partition added back, and counters equal to counts over a copy."""
+    from beamium_spark.sources.tables import ParquetTierStore
+
+    state = str(tmp_path / "s")
+    ref = str(tmp_path / "ref")
+    shutil.copytree(full_state, state)
+    shutil.copytree(full_state, ref)
+    before = {t: ParquetTierStore(spark, ref).partitions(t) for t in ("rollup_1h", "blocks")}
+    caps = {t: sum(b for _, b in parts.values()) // 2 for t, parts in before.items()}
+    conf = JobConf(retention={t: RetentionPolicy(cap_bytes=c) for t, c in caps.items()})
+    job = RollupJob(spark, ensure_web_pages(0.0003), state, conf)
+
+    started, out = _spark_jobs(spark, lambda: job.apply_retention("2025-01-04T00:00:00"))
+    assert started == set()
+    for table, cap in caps.items():
+        kept = job.store.partitions(table)
+        evicted = sorted(set(before[table]) - set(kept))
+        assert kept and evicted, table
+        assert max(evicted) < min(kept), table
+        kept_bytes = sum(b for _, b in kept.values())
+        assert kept_bytes <= cap < kept_bytes + before[table][evicted[-1]][1], table
+        want_rows = (
+            spark.read.parquet(f"{ref}/{table}")
+            .filter(F.col("chunk_key").isin(evicted))
+            .count()
+        )
+        assert out[table] == {"evicted_chunks": len(evicted), "evicted_rows": want_rows}
+
+
+def test_daemon_size_cap_evicts_oldest_partitions(spark, tmp_path):
+    """A daemon sink's ``size`` goes through the shared retention pass:
+    the default 1 GiB cap evicts nothing, a small one unlinks the oldest
+    hours, and neither starts a Spark job."""
+    from beamium_spark.conf import load_conf
+    from beamium_spark.plans.daemon import ScrapeDaemon, ScraperSource
+
+    prom = tmp_path / "prom"
+    prom.mkdir()
+    t0 = 1735689600000
+    (prom / "scrape-0.metrics").write_text("".join(
+        f'm{{i="{i}"}} {i} {t0 + h * 3_600_000 + i}\n' for h in range(4) for i in range(20)
+    ))
+    conf = load_conf({
+        "scrapers": {"web": {"format": "prometheus"}},
+        "sinks": {"all": {"table": "all", "ttl": 30 * 24 * 3600}},
+    })
+    daemon = ScrapeDaemon(spark, conf, [ScraperSource(conf.scrapers[0], str(prom))],
+                          str(tmp_path / "state"), t0 * 1000)
+    assert daemon.run_once()["chunks"] == 4
+    now = "2025-01-01T04:00:00"
+
+    started, out = _spark_jobs(spark, lambda: daemon.apply_retention(now))
+    assert started == set()
+    assert out["all"]["evicted_chunks"] == 0 and out["all"]["expired_partitions"] == 0
+
+    before = daemon.store.partitions("all")
+    keys = list(before)
+    conf.sinks[0].size_bytes = before[keys[-1]][1] + before[keys[-2]][1]
+    started, out = _spark_jobs(spark, lambda: daemon.apply_retention(now))
+    assert started == set()
+    assert list(daemon.store.partitions("all")) == keys[-2:]
+    assert out["all"]["evicted_chunks"] == 2 and out["all"]["evicted_rows"] == 40

@@ -40,23 +40,19 @@ def test_ttl_evicts_exactly_expired(spark, job):
     assert out2["expired_partitions"] == 0 and out2["expired_rows"] == 0
 
 
-def test_size_cap_plan_oldest_first(spark):
-    sizes = spark.createDataFrame(
-        [("2025-01-01 00:00:00", 100), ("2025-01-01 01:00:00", 100),
-         ("2025-01-01 02:00:00", 100), ("2025-01-01 03:00:00", 100)],
-        "chunk_start string, bytes long",
-    ).withColumn("chunk_start", F.col("chunk_start").cast("timestamp"))
-    doomed = size_cap_plan(sizes, cap_bytes=250)
-    got = sorted(str(r["chunk_start"]) for r in doomed.collect())
+def test_size_cap_plan_oldest_first():
+    sizes = {"2025-01-01-02": 100, "2025-01-01-00": 100,
+             "2025-01-01-03": 100, "2025-01-01-01": 100}
+    got = sorted(size_cap_plan(sizes, cap_bytes=250))
     # newest 2 chunks fit within 250; the two OLDEST are evicted
-    assert got == ["2025-01-01 00:00:00", "2025-01-01 01:00:00"]
+    assert got == ["2025-01-01-00", "2025-01-01-01"]
 
 
 def test_size_cap_evict_on_store(spark, job):
     per_chunk = job.store.read("rollup_1h").groupBy("chunk_start").count().collect()
     assert len(per_chunk) > 1
-    total = sum(r["count"] for r in per_chunk)
-    cap = 64 * (total // 3)  # keep roughly the newest third
+    on_disk = [nbytes for _, nbytes in job.store.partitions("rollup_1h").values()]
+    cap = sum(on_disk) // 3  # keep roughly the newest third
     out = size_cap_evict(job.store, "rollup_1h", cap_bytes=cap)
     assert out["evicted_chunks"] > 0
     assert out["evicted_rows"] > 0
@@ -77,8 +73,8 @@ def test_size_cap_evict_on_store(spark, job):
 
 
 def test_size_cap_blocks_uses_block_accounting(spark, tmp_path):
-    """The blocks size cap sums encoded block bytes (ts/val lengths), not
-    row estimates, and evicts oldest chunks first."""
+    """The blocks size cap sums the partitions' parquet bytes on disk, as
+    every table's cap does, and evicts oldest chunks first."""
     from beamium_spark.plans.job import JobConf, RetentionPolicy, RollupJob
 
     j = RollupJob(
