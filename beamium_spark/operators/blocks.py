@@ -36,9 +36,7 @@ BLOCK_SCHEMA = (
 POINT_SCHEMA = "bucket int, metric string, ts timestamp, value double"
 
 
-def encode_blocks(
-    points: DataFrame, chunk: str = "1 hour", n_partitions: int | None = None
-) -> DataFrame:
+def encode_blocks(points: DataFrame, chunk: str = "1 hour") -> DataFrame:
     """points(bucket, metric, ts, value, ...) → blocks table.
 
     One output row per (bucket, metric, chunk_start); points are sorted by
@@ -61,9 +59,9 @@ def encode_blocks(
         F.col("ts"),
         "value",
     )
-    if n_partitions is None:
-        n_partitions = int(points.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    dist = chunked.repartition(n_partitions, "bucket", "metric", "chunk_start").sortWithinPartitions(
+    # no partition count: AQE can coalesce a column-keyed repartition to
+    # the data's size, so a small tick encodes in one Python task
+    dist = chunked.repartition("bucket", "metric", "chunk_start").sortWithinPartitions(
         "bucket", "metric", "chunk_start", "ts"
     )
 

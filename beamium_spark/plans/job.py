@@ -278,9 +278,6 @@ class RollupJob:
             ).alias("valid"),
         ).collect()[0]
         scraped, valid = pg["scraped"], pg["valid"]
-        n_points = points.count()
-        n_families = len(METRICS)
-        filtered = (scraped - valid) + (valid * n_families - n_points)
 
         if self.conf.salt_factor:
             t1m = rollup_tier_salted(
@@ -292,8 +289,11 @@ class RollupJob:
         # data write only — the rollup_1m manifest row is the pending-work
         # marker, so it must land LAST, after blocks and both cascades:
         # a kill anywhere in between leaves the chunk pending and the rerun
-        # redoes every (idempotent-overwrite) write for it
-        forwarded = self._write_tier_data(t1m, "rollup_1m")
+        # redoes every (idempotent-overwrite) write for it. This first
+        # action over ``points`` fills its cache, and its cnt column sums
+        # to the point count: every point has a ts and a finite value.
+        forwarded, n_points = self._write_tier_data(t1m, "rollup_1m")
+        filtered = (scraped - valid) + (valid * len(METRICS) - n_points)
 
         if self.conf.write_blocks:
             blocks = encode_blocks(
@@ -354,7 +354,7 @@ class RollupJob:
             )
             .withColumn("chunk_start", F.col("window_start"))
         )
-        fwd_1h = self._write_tier_data(t1h, "rollup_1h")
+        fwd_1h, _ = self._write_tier_data(t1h, "rollup_1h")
         t1d = (
             rollup_cascade(
                 self.store.read("rollup_1h").filter(
@@ -364,7 +364,7 @@ class RollupJob:
             )
             .withColumn("chunk_start", F.col("window_start"))
         )
-        fwd_1d = self._write_tier_data(t1d, "rollup_1d")
+        fwd_1d, _ = self._write_tier_data(t1d, "rollup_1d")
 
         if self.conf.alert_rules:
             eps = day_alert_episodes(
@@ -399,15 +399,14 @@ class RollupJob:
         )
         return report
 
-    def _write_tier_data(self, tier_df: DataFrame, table: str) -> int:
+    def _write_tier_data(self, tier_df: DataFrame, table: str) -> tuple[int, int]:
         """Idempotent tier data write (chunk partition overwrite) with
         beamium's commit backoff; manifest rows are the caller's business —
         ordering them after all dependent writes is what makes kill-anywhere
-        replay sound.
+        replay sound. Returns (rows written, sum of their ``cnt``).
 
-        The forwarded counter rides the write via ``observe()`` (r6) —
-        previously the frame was cached and counted in a separate action
-        before the write (cache fill + cache re-read per tier). Fresh
+        Both counters ride the write via ``observe()`` on the tier frame,
+        below the store's hash exchange, which runs its child once. Fresh
         Observation per attempt: a backoff retry re-runs the closure and an
         Observation is single-use."""
         from pyspark.sql import Observation
@@ -416,11 +415,19 @@ class RollupJob:
 
         def _attempt() -> None:
             ob = Observation()
-            self.store.write_chunks(tier_df, table, "chunk_start", observation=ob)
-            result["n"] = ob.get["n"]
+            self.store.write_chunks(
+                tier_df.observe(
+                    ob,
+                    F.count(F.lit(1)).alias("n"),
+                    F.coalesce(F.sum("cnt"), F.lit(0)).alias("points"),
+                ),
+                table,
+                "chunk_start",
+            )
+            result.update(ob.get)
 
         commit_with_retry(_attempt)
-        return result["n"]
+        return result["n"], result["points"]
 
     # ---- retention -------------------------------------------------------
 

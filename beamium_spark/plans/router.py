@@ -68,13 +68,15 @@ def route_multicast(
                 # observe(): the forwarded counter rides the write action
                 # itself — the old ``out.count()`` was a SECOND full pass
                 # over the cached frame per sink (3 sinks = 3 extra jobs
-                # per batch; r5 VERDICT). The store attaches the metrics
-                # node above its range exchange (sampling would
-                # double-count below it). Fresh Observation per attempt:
+                # per batch; r5 VERDICT). Fresh Observation per attempt:
                 # commit_with_retry may re-run write_all and an
                 # Observation is single-use.
                 ob = Observation(f"route_{sink.name}")
-                store.write_chunks(out, sink.table, "chunk_start", observation=ob)
+                store.write_chunks(
+                    out.observe(ob, F.count(F.lit(1)).alias("n")),
+                    sink.table,
+                    "chunk_start",
+                )
                 counts[sink.name] = ob.get["n"]
 
         commit_with_retry(

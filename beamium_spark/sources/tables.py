@@ -48,12 +48,22 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 class ParquetTierStore:
     def __init__(
         self, spark: SparkSession, root: str, max_records_per_file: int = 1_000_000
     ):
+        tz = spark.conf.get("spark.sql.session.timeZone")
+        zone = spark._jvm.java.time.ZoneId
+        if not zone.of(tz).normalized().equals(zone.of("UTC").normalized()):
+            # chunk keys and decoded block timestamps are formatted in the
+            # session zone: any other zone files an hour under another key
+            raise ValueError(
+                f"spark.sql.session.timeZone is {tz!r}; the tier store "
+                "requires UTC"
+            )
         # max_records_per_file is the write-side batch cap — the engine's
         # analogue of beamium's batch-size/batch-count file caps
         # (/root/reference/src/conf.rs:125-126): production files are sized
@@ -61,6 +71,10 @@ class ParquetTierStore:
         self.spark = spark
         self.root = root.rstrip("/")
         self.max_records_per_file = max_records_per_file
+        # table → its schema with ``chunk_key``: a read of a table this
+        # store wrote or has read once infers nothing (inference is a
+        # Spark job over a file footer)
+        self._schemas: dict[str, T.StructType] = {}
         # Py4J resolves a JVM class name one package segment at a time, a
         # round trip each: resolve the control plane's classes once
         jvm = spark._jvm
@@ -177,7 +191,12 @@ class ParquetTierStore:
         )
 
     def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(table))
+        schema = self._schemas.get(table)
+        if schema is None:
+            df = self.spark.read.parquet(self.path(table))
+            self._schemas[table] = df.schema
+            return df
+        return self.spark.read.schema(schema).parquet(self.path(table))
 
     #: default clustering for tier-shaped tables — any subset present in
     #: the frame is used, in this order
@@ -189,46 +208,45 @@ class ParquetTierStore:
         table: str,
         chunk_col: str = "chunk_start",
         sort_cols: tuple[str, ...] | None = SORT_COLS,
-        observation=None,
     ) -> None:
         """Idempotent per-chunk overwrite: partitions by an **hour-granular**
         chunk key and replaces only partitions present in ``df`` (dynamic
-        overwrite mode, set in the session factory). Hour granularity makes
-        the overwrite unit exactly the job's work unit — a partial day never
+        overwrite mode, set on the writer). Hour granularity makes the
+        overwrite unit exactly the job's work unit — a partial day never
         clobbers sibling chunks.
 
-        Rows are CLUSTERED on (chunk_key, *sort_cols∩columns): one
-        range-repartition + within-task sort makes every emitted parquet
-        file a GLOBALLY disjoint sorted run, so file- and row-group-level
-        min/max stats prune reads filtered on bucket/metric, not just on
-        time — at 10^5+ chunks × many files that is the difference
-        between listing stats and scanning data. The write pays one
-        range exchange, but tier frames are key-cardinality-bounded (the
-        post-agg output, never raw data) and the store is read many
-        times per write. Leading with chunk_key also satisfies the
-        partitioned writer's required ordering, so Spark adds no extra
-        sort of its own. ``sort_cols=None`` disables both (append-shaped
-        tables)."""
+        Rows are CLUSTERED on (chunk_key, *sort_cols∩columns): a hash
+        exchange on chunk_key sends each chunk to exactly one writer
+        task, whose within-task sort makes its files consecutive slices
+        of one sorted run — disjoint even when ``maxRecordsPerFile``
+        splits the chunk. File- and row-group-level min/max stats then
+        prune reads filtered on bucket/metric, not just on time. The one
+        exchange runs its child once (no sampling pass) and AQE sizes its
+        reducers by the data. Leading the sort with chunk_key also
+        satisfies the partitioned writer's required ordering, so Spark
+        adds no sort of its own. ``sort_cols=None`` disables both
+        (append-shaped tables). A row counter goes on the caller's frame
+        (``df.observe``): nothing below the exchange runs twice."""
         out = df.withColumn("chunk_key", F.date_format(chunk_col, "yyyy-MM-dd-HH"))
         cluster = [c for c in (sort_cols or ()) if c in out.columns]
         if cluster:
-            out = out.repartitionByRange("chunk_key", *cluster).sortWithinPartitions(
+            out = out.repartition("chunk_key").sortWithinPartitions(
                 "chunk_key", *cluster
             )
-        if observation is not None:
-            # row counter riding the write action (router forwarded
-            # counters — saves a second pass per sink). Attached ABOVE the
-            # range exchange: the range partitioner's sampling pass
-            # re-executes everything below the exchange, so a metrics node
-            # under it would double-count.
-            out = out.observe(observation, F.count(F.lit(1)).alias("n"))
         out.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).option(
             "maxRecordsPerFile", self.max_records_per_file
         ).partitionBy("chunk_key").parquet(self.path(table))
+        # what a read infers: the data columns, then the partition column
+        self._schemas[table] = T.StructType(
+            [T.StructField(f.name, f.dataType, True, f.metadata)
+             for f in out.schema if f.name != "chunk_key"]
+            + [T.StructField("chunk_key", T.StringType(), True)]
+        )
 
     def append(self, df: DataFrame, table: str) -> None:
+        self._schemas.pop(table, None)
         df.write.mode("append").parquet(self.path(table))
 
     def overwrite_partition(self, df: DataFrame, table: str, part_col: str) -> None:
@@ -242,6 +260,7 @@ class ParquetTierStore:
         whole table to the current frame's rows (the round-3 gate's red
         row). Writer-level options take precedence over the session conf,
         so the store is safe to embed in any session."""
+        self._schemas.pop(table, None)
         df.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy(part_col).parquet(self.path(table))
@@ -407,6 +426,7 @@ class ParquetTierStore:
         return {k: files for k, (files, _) in self.partitions(table).items()}
 
     def drop(self, table: str) -> None:
+        self._schemas.pop(table, None)
         self._delete(self.path(table))
 
 

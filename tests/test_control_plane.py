@@ -278,3 +278,64 @@ def test_daemon_size_cap_evicts_oldest_partitions(spark, tmp_path):
     assert started == set()
     assert list(daemon.store.partitions("all")) == keys[-2:]
     assert out["all"]["evicted_chunks"] == 2 and out["all"]["evicted_rows"] == 40
+
+
+def test_tick_starts_at_most_15_spark_jobs(spark, tmp_path):
+    """A one-chunk tick on a pre-filled store: each tier write is one
+    hash exchange, the block encoder's tasks follow the data, the
+    cascade reads infer no schema and the point count rides the 1m
+    write. That is at most 15 Spark jobs (23 with a range-sampled
+    exchange per write). A read of a table the store wrote starts no
+    job; another store infers a table's schema once."""
+    from beamium_spark.sources.tables import ParquetTierStore
+
+    pages, state = ensure_web_pages(0.0003), str(tmp_path / "s")
+    conf = JobConf(bucket_mode="site")
+    RollupJob(spark, pages, state, conf).run(max_chunks=4)
+    job = RollupJob(spark, pages, state, conf)
+    started, report = _spark_jobs(spark, lambda: job.run(max_chunks=1))
+    assert report["chunks"] == 1
+    assert 0 < len(started) <= 15, sorted(started)
+
+    other = ParquetTierStore(spark, state)
+    for table in ("rollup_1m", "rollup_1h", "rollup_1d", "blocks"):
+        started, df = _spark_jobs(spark, lambda: job.store.read(table))
+        assert started == set(), table
+        first, inferred = _spark_jobs(spark, lambda: other.read(table))
+        again, _ = _spark_jobs(spark, lambda: other.read(table))
+        assert first and again == set(), table
+        assert df.schema == inferred.schema, table
+        _assert_same(df, inferred)
+
+
+@pytest.mark.parametrize(
+    "conf",
+    [
+        JobConf(bucket_mode="site", write_blocks=False,
+                metric_whitelist="^(doc_count|lang_rate)"),
+        JobConf(bucket_mode="site", write_blocks=False, salt_factor=4),
+    ],
+    ids=["whitelist", "salted"],
+)
+def test_filtered_counts_the_points_the_1m_write_observed(spark, tmp_path, conf):
+    """``filtered`` = dropped pages + dropped candidate points, where the
+    point count is the ``cnt`` sum observed on the 1m write. Both equal
+    counts over the extracted points, with a whitelist that drops two
+    families and with the two-stage salted rollup."""
+    from beamium_spark.operators.extract import METRICS, extract_points
+
+    job = RollupJob(spark, ensure_web_pages(0.0003), str(tmp_path / "s"), conf)
+    report = job.run()
+    pages = job.pages()
+    scraped = pages.count()
+    valid = pages.filter(F.col("url").isNotNull() & F.col("warc_ts").isNotNull()).count()
+    points = extract_points(
+        pages, bucket_mode="site", metric_whitelist=conf.metric_whitelist
+    ).count()
+
+    assert report["scraped"] == scraped
+    assert report["filtered"] == (scraped - valid) + (valid * len(METRICS) - points)
+    # the observed point count: the cnt sum of the 1m rows written
+    assert job.tier("rollup_1m").agg(F.sum("cnt")).first()[0] == points > 0
+    if conf.metric_whitelist:
+        assert report["filtered"] > 0

@@ -13,52 +13,57 @@ from beamium_spark.streaming.rollup_stream import run_stream_to_store
 
 
 def test_stream_matches_batch(spark, tmp_path):
+    # cached in the shared session: unpersisted on the way out, or later
+    # tests reading the same files plan against the in-memory relation
     pages = spark.read.parquet(ensure_web_pages(0.0003)).cache()
-    split_ts = "2025-01-03 00:00:00"
-    part_a = pages.filter(F.col("warc_ts") < split_ts)
-    part_b = pages.filter(F.col("warc_ts") >= split_ts)
-    sentinel = spark.createDataFrame(
-        [("https://site0000.example/sentinel", "x", "en")],
-        "url string, text string, lang string",
-    ).select(
-        "url",
-        F.lit((BASE_TS_US + 10 * 86400 * 1000000) // 1000000)
-        .cast("timestamp")
-        .alias("warc_ts"),
-        F.lit(b"<html><body>x</body></html>").alias("html"),
-        "text",
-        "lang",
-    ).select("url", "warc_ts", "html", "text", "lang")
-
-    stream_dir = str(tmp_path / "in")
-    store = ParquetTierStore(spark, str(tmp_path / "store"))
-
-    part_a.coalesce(1).write.mode("append").parquet(stream_dir)
-    q = run_stream_to_store(
-        spark, stream_dir, store,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        watermark="10 minutes", bucket_mode="site",
-    )
     try:
-        q.processAllAvailable()
-        part_b.coalesce(1).write.mode("append").parquet(stream_dir)
-        q.processAllAvailable()
-        sentinel.coalesce(1).write.mode("append").parquet(stream_dir)
-        q.processAllAvailable()
-    finally:
-        q.stop()
+        split_ts = "2025-01-03 00:00:00"
+        part_a = pages.filter(F.col("warc_ts") < split_ts)
+        part_b = pages.filter(F.col("warc_ts") >= split_ts)
+        sentinel = spark.createDataFrame(
+            [("https://site0000.example/sentinel", "x", "en")],
+            "url string, text string, lang string",
+        ).select(
+            "url",
+            F.lit((BASE_TS_US + 10 * 86400 * 1000000) // 1000000)
+            .cast("timestamp")
+            .alias("warc_ts"),
+            F.lit(b"<html><body>x</body></html>").alias("html"),
+            "text",
+            "lang",
+        ).select("url", "warc_ts", "html", "text", "lang")
 
-    cutoff = "2025-01-05 00:00:00"  # excludes only the sentinel's windows
-    streamed = (
-        store.read("stream_rollup_1m")
-        .drop("chunk_start", "chunk_key", "epoch_id")
-        .filter(F.col("window_start") < cutoff)
-    )
-    batch = rollup_tier(extract_points(pages, bucket_mode="site"), "1 minute")
-    cols = sorted(streamed.columns)
-    assert streamed.select(cols).exceptAll(batch.select(cols)).count() == 0
-    assert batch.select(cols).exceptAll(streamed.select(cols)).count() == 0
-    assert pytest  # keep import
+        stream_dir = str(tmp_path / "in")
+        store = ParquetTierStore(spark, str(tmp_path / "store"))
+
+        part_a.coalesce(1).write.mode("append").parquet(stream_dir)
+        q = run_stream_to_store(
+            spark, stream_dir, store,
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            watermark="10 minutes", bucket_mode="site",
+        )
+        try:
+            q.processAllAvailable()
+            part_b.coalesce(1).write.mode("append").parquet(stream_dir)
+            q.processAllAvailable()
+            sentinel.coalesce(1).write.mode("append").parquet(stream_dir)
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+        cutoff = "2025-01-05 00:00:00"  # excludes only the sentinel's windows
+        streamed = (
+            store.read("stream_rollup_1m")
+            .drop("chunk_start", "chunk_key", "epoch_id")
+            .filter(F.col("window_start") < cutoff)
+        )
+        batch = rollup_tier(extract_points(pages, bucket_mode="site"), "1 minute")
+        cols = sorted(streamed.columns)
+        assert streamed.select(cols).exceptAll(batch.select(cols)).count() == 0
+        assert batch.select(cols).exceptAll(streamed.select(cols)).count() == 0
+        assert pytest  # keep import
+    finally:
+        pages.unpersist()
 
 
 def test_epoch_replay_is_idempotent(spark, tmp_path):

@@ -110,3 +110,14 @@ def test_delete_where_and_compact_static_session(static_spark, tmp_path):
     stats = store.compact_chunks("t1m", chunks=["2025-01-01-00"])
     assert stats["chunks"] == 1
     assert store.read("t1m").count() == 2
+
+
+def test_store_requires_a_utc_session(spark, tmp_path):
+    """Chunk keys and decoded block timestamps are formatted in the
+    session zone, so a store refuses any zone that is not UTC."""
+    s = spark.newSession()
+    s.conf.set("spark.sql.session.timeZone", "America/New_York")
+    with pytest.raises(ValueError, match="requires UTC"):
+        ParquetTierStore(s, str(tmp_path / "ny"))
+    s.conf.set("spark.sql.session.timeZone", "Etc/UTC")
+    ParquetTierStore(s, str(tmp_path / "utc"))
