@@ -12,9 +12,9 @@ One ``run()`` is a micro-batch pass (beamium's scrape tick,
    re-forwards any new file in a scanned directory (src/router.rs:56-77);
 2. per pending chunk set: extract points → 1m rollup → idempotent
    partition overwrite → Gorilla blocks;
-3. cascade: recompute 1h windows of the touched hours and 1d windows of
-   the touched days **from the tier below** (decomposable tuples — raw
-   data is read exactly once, by the 1m pass);
+3. cascade: 1h windows of the pending hours from their stored 1m
+   partitions, 1d windows of the touched days from the stored 1h tier
+   (decomposable tuples — raw data is read exactly once, by the 1m pass);
 4. the fence: one log segment with the 1m/1h/1d commit records, the
    chunks' source-file baseline and ``run_complete``;
 5. retention and compaction: ``retention_pass`` and ``compaction_pass``,
@@ -46,7 +46,7 @@ from pyspark.sql import types as T
 
 from beamium_spark.operators.blocks import encode_blocks
 from beamium_spark.operators.extract import extract_points
-from beamium_spark.operators.retention import size_cap_evict, ttl_evict
+from beamium_spark.operators.retention import KEY_FORMAT, size_cap_evict, ttl_evict
 from beamium_spark.operators.rollup import (
     day_alert_episodes,
     rollup_cascade,
@@ -339,16 +339,18 @@ class RollupJob:
                 lambda: self.store.write_chunks(dsk, "distinct_1h", "chunk_start")
             )
 
-        # cascades from the tier below, recomputed for every *date* touched:
-        # tier writes are dynamic overwrites of whole chunk_date partitions,
-        # so the rewritten partitions must be complete days, not just the
-        # hours of this pass
+        # tier writes are dynamic overwrites of hour chunk_key partitions.
+        # A 1h window is one chunk hour, so the 1h cascade reads only the
+        # pending hours' 1m partitions, just written. (Cascading this
+        # pass's t1m instead costs one more Spark job: a second exchange
+        # of the cached points.) A 1d window spans the whole day: its
+        # cascade reads the stored 1h rows of every touched day.
         touched_days = sorted({h.replace(hour=0, minute=0, second=0) for h in pending})
         touched_dates = [d.date() for d in touched_days]
         t1h = (
             rollup_cascade(
                 self.store.read("rollup_1m").filter(
-                    F.to_date("window_start").isin(touched_dates)
+                    F.col("chunk_key").isin([h.strftime(KEY_FORMAT) for h in pending])
                 ),
                 "1 hour",
             )

@@ -26,6 +26,11 @@ def get_spark(
     ``shuffle_partitions`` defaults to the core count — on a real cluster
     this should be ~2-3x total executor cores instead.
 
+    ``BEAMIUM_SPARK_DRIVER_MEM`` (env, default 16g) caps the driver heap
+    (``-Xmx``); it is a ceiling, not a reservation. The JVM commits only
+    the heap the work uses, so the default starts on a host with less
+    memory than that.
+
     The UTC session time zone set here is a requirement of the engine,
     not a tuning choice: the hour chunk keys (``date_trunc("hour", ...)``,
     ``to_date`` and the ``chunk_key`` partition names) and
@@ -64,11 +69,11 @@ def get_spark(
         .config("spark.driver.memory", mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # multi-KiB binary html cells thrash the allocator if the heap can
-        # grow/uncommit (microVM refaults are expensive and erratic —
-        # measured 10-60x jitter): pin Xms=Xmx, pre-touch once, and use
-        # large G1 regions so big byte[]s aren't humongous. Smaller
-        # columnar batches bound per-task buffers.
+        # driver memory is a ceiling (-Xmx), not a reservation: G1 commits
+        # the heap the work touches (about 1.2 GiB of a 2 GiB cap after
+        # a four-chunk catch-up), so the 16 GiB default starts on a
+        # smaller host. Large G1 regions keep multi-KiB binary cells from
+        # being humongous allocations.
         # ActiveProcessorCount pins JVM-internal pools (GC, JIT, ForkJoin)
         # to the executor's core share instead of the whole box — exactly
         # what a cluster container's cpuset gives an executor JVM; without
@@ -77,7 +82,7 @@ def get_spark(
         # of the local[N] master).
         .config(
             "spark.driver.extraJavaOptions",
-            f"-XX:G1HeapRegionSize=32m -Xms{mem} -XX:+AlwaysPreTouch "
+            "-XX:G1HeapRegionSize=32m "
             f"-XX:ActiveProcessorCount={os.environ.get('BEAMIUM_JVM_PROCS', cores)}",
         )
         # fat-binary parquet scans (multi-KiB html/text cells) are bound by

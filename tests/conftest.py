@@ -5,11 +5,11 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# Tests run tiny fixtures in local[8]; the session factory's default 16 GiB
-# pinned+pre-touched heap (a bench-stability setting) costs ~60 s of page
-# zero-fill PER JVM on a cold box. 4 GiB is ample for every fixture and
-# keeps startup ~8 s. setdefault → propagates to subprocess-spawning tests
-# (spark-submit, kill9, streaming) while explicit settings still win.
+# Tests run tiny fixtures in local[8]. The driver memory setting is a heap
+# ceiling, not a reservation; 4 GiB is ample for every fixture and keeps a
+# runaway test from growing the heap toward the factory's 16 GiB default.
+# setdefault → propagates to subprocess-spawning tests (spark-submit,
+# kill9, streaming) while explicit settings still win.
 os.environ.setdefault("BEAMIUM_SPARK_DRIVER_MEM", "4g")
 
 from beamium_spark.session import get_spark  # noqa: E402

@@ -117,7 +117,7 @@ def test_replaced_and_removed_files_replay_exactly_their_chunks(spark, tmp_path)
 def test_leftover_tmp_segment_is_ignored_and_replay_keeps_counters(spark, tmp_path):
     """A kill between a fence's write and its rename leaves only
     ``.<segment>.tmp``: readers skip it and the run's chunks replay.
-    Afterwards the 1m counters equal an uninterrupted run's, and every
+    Afterwards the 1m and 1h counters equal an uninterrupted run's, and every
     committed run keeps its 1h and 1d records, which share its fence."""
     pages = ensure_web_pages(0.0003)
     conf = JobConf(bucket_mode="site", write_blocks=False)
@@ -138,13 +138,14 @@ def test_leftover_tmp_segment_is_ignored_and_replay_keeps_counters(spark, tmp_pa
     ref.run()
     got = {r["tier"]: r.asDict() for r in job.counters().collect()}
     want = {r["tier"]: r.asDict() for r in ref.counters().collect()}
+    # the 1h cascade writes only the pending hours, so its counters add
+    # up across runs like the 1m ones
     assert got["rollup_1m"] == want["rollup_1m"]
-    assert got["rollup_1h"]["chunks"] == want["rollup_1h"]["chunks"]
-    # each committed run carries its 1h and 1d records; the cascades
-    # rebuild whole touched days, so the day both runs share counts twice
+    assert got["rollup_1h"] == want["rollup_1h"]
+    # each committed run carries its 1h and 1d records; the 1d cascade
+    # rebuilds whole touched days, so the day both runs share counts twice
     assert [job.manifest.commits(t) for t in ("rollup_1m", "rollup_1h", "rollup_1d")] == [2, 2, 2]
-    for tier in ("rollup_1h", "rollup_1d"):
-        assert got[tier]["forwarded"] >= want[tier]["forwarded"] > 0
+    assert got["rollup_1d"]["forwarded"] >= want["rollup_1d"]["forwarded"] > 0
     g = job.gauges()
     assert g["runs_started"] == 3 and g["runs_completed"] == 2
     assert g["commits_ok"] == 2 and g["pending_chunks"] == 0
