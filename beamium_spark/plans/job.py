@@ -35,6 +35,7 @@ reason).
 
 from __future__ import annotations
 
+import datetime as dt
 import hashlib
 from collections import defaultdict
 from dataclasses import dataclass, field
@@ -158,6 +159,20 @@ class JobConf:
     )
 
 
+def _utc_wall(t: dt.datetime) -> dt.datetime:
+    """A collected Spark timestamp as naive UTC wall time, the clock of
+    the store's ``chunk_key`` and of ``to_date`` in the UTC session.
+    ``collect()`` returns naive datetimes in the driver process's local
+    zone whatever the session zone."""
+    return dt.datetime.fromtimestamp(t.timestamp(), dt.timezone.utc).replace(tzinfo=None)
+
+
+def _utc_lit(t: dt.datetime):
+    """A timestamp literal of a naive UTC wall time: PySpark reads a
+    naive ``datetime`` as the driver's local time."""
+    return F.lit(t.replace(tzinfo=dt.timezone.utc))
+
+
 class RollupJob:
     def __init__(
         self,
@@ -179,8 +194,9 @@ class RollupJob:
         return self.spark.read.schema(PAGES_SCHEMA).parquet(self.pages_path)
 
     def _scan_chunks(self, files: list[str]) -> dict[str, list]:
-        """relative path → hour-chunks it holds, for ``files``: one Spark
-        job over their ``warc_ts``, grouped by ``input_file_name()``."""
+        """relative path → hour-chunks it holds (naive UTC wall time, as
+        every chunk the driver keeps), for ``files``: one Spark job over
+        their ``warc_ts``, grouped by ``input_file_name()``."""
         base = self.pages_path.rstrip("/")
         rows = (
             self.spark.read.schema(PAGES_SCHEMA)
@@ -193,7 +209,7 @@ class RollupJob:
         fs, root = self.store._fs_path(base)
         prefix = fs.makeQualified(root).toUri().getPath().rstrip("/") + "/"
         found = {
-            unquote(urlparse(r["f"]).path)[len(prefix):]: sorted(r["chunks"])
+            unquote(urlparse(r["f"]).path)[len(prefix):]: sorted(map(_utc_wall, r["chunks"]))
             for r in rows
         }
         return {f: found.get(f, []) for f in files}
@@ -247,9 +263,9 @@ class RollupJob:
         # range + set predicate: range reaches row-group stats, the isin
         # prunes interior committed chunks
         in_pending = (
-            (F.col("warc_ts") >= F.lit(lo))
-            & (F.col("warc_ts") < F.lit(hi) + F.expr("interval 1 hour"))
-            & F.date_trunc("hour", "warc_ts").isin(pending)
+            (F.col("warc_ts") >= _utc_lit(lo))
+            & (F.col("warc_ts") < _utc_lit(hi) + F.expr("interval 1 hour"))
+            & F.date_trunc("hour", "warc_ts").isin([_utc_lit(c) for c in pending])
         )
         source = self.pages()
         pages = source.filter(in_pending)

@@ -131,26 +131,44 @@ def _ship_package(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if getattr(sc, "_beamium_shipped", False):
         return
+    import hashlib
     import tempfile
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(tempfile.gettempdir(), "beamium_spark_pyfiles.zip")
-    # pid-unique temp + atomic replace: concurrent driver processes (e.g.
-    # the multi-executor bench workers) otherwise race on one shared .tmp
-    # and crash with FileNotFoundError when another's move wins
-    tmp = f"{zpath}.{os.getpid()}.tmp"
-    with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as z:
-        for root, _dirs, files in os.walk(pkg_dir):
-            if "__pycache__" in root:
-                continue
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    rel = os.path.join(
-                        "beamium_spark", os.path.relpath(full, pkg_dir)
-                    )
-                    z.write(full, rel)
-    os.replace(tmp, zpath)
+    sources = []
+    for root, _dirs, files in os.walk(pkg_dir):
+        if "__pycache__" in root:
+            continue
+        for f in files:
+            if f.endswith(".py"):
+                full = os.path.join(root, f)
+                rel = os.path.join("beamium_spark", os.path.relpath(full, pkg_dir))
+                with open(full, "rb") as fh:
+                    sources.append((rel, fh.read()))
+    sources.sort()
+    digest = hashlib.sha1()
+    for rel, data in sources:
+        digest.update(rel.encode() + b"\0" + data)
+    # named by content and written with fixed entry times: every driver
+    # process on the host shares the temp dir, and Spark fails a task
+    # whose executor finds a shipped file's bytes changed since it was
+    # added — so a file of this name only ever holds these bytes
+    zpath = os.path.join(
+        tempfile.gettempdir(), f"beamium_spark_pyfiles-{digest.hexdigest()[:16]}.zip"
+    )
+    if not os.path.exists(zpath):
+        # pid-unique temp + atomic replace: concurrent driver processes
+        # (e.g. the multi-executor bench workers) otherwise race on one
+        # shared .tmp
+        tmp = f"{zpath}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as z:
+            for rel, data in sources:
+                z.writestr(
+                    zipfile.ZipInfo(rel, date_time=(1980, 1, 1, 0, 0, 0)),
+                    data,
+                    zipfile.ZIP_DEFLATED,
+                )
+        os.replace(tmp, zpath)
     sc.addPyFile(zpath)
     sc._beamium_shipped = True

@@ -21,10 +21,10 @@ def _barrier(out_dir: str) -> None:
     """Startup/warm-up barrier: when BEAMIUM_BENCH_GO is set, signal
     readiness (``<out>.ready``) and spin until the parent creates the go
     file. Without it, concurrent workers overlap one worker's TIMED
-    section with another's JVM startup + AlwaysPreTouch + warm-up — the
-    measured source of the 0.43-0.88 efficiency spread: 4 heaps
-    pre-touching tens of GB saturate the memory bus exactly while the
-    fastest worker is already timing."""
+    section with another's JVM startup + warm-up — the measured source of
+    the 0.43-0.88 efficiency spread, when worker heaps were still
+    pre-touched and 4 of them zero-filled tens of GB exactly while the
+    fastest worker was already timing."""
     go = os.environ.get("BEAMIUM_BENCH_GO")
     if not go:
         return

@@ -21,12 +21,13 @@ max(executor compute) + merge. JVM startup excluded at both levels
 Measurement discipline (round-3/4 findings — the 0.43-0.88 spread was
 harness artifacts, not the engine):
 
-- **6 GiB pinned worker heaps** (was 10g): 4 × -Xms + AlwaysPreTouch of
-  10 GiB heaps pushed ~40 GB through the memory bus during startup.
+- **6 GiB worker heap ceilings** (`-Xmx`; was 10g): the session factory
+  neither reserves nor pre-touches the heap, so each worker commits only
+  what its shard scan uses and 4 workers fit the box side by side.
 - **warm-up barrier**: every worker signals ready after its warm-up run
   and waits for a go-file, so no worker's timed section overlaps another
-  worker's JVM startup / pre-touch / warm-up. Without it the fastest
-  worker times its run while stragglers zero their heaps.
+  worker's JVM startup / warm-up. Without it the fastest worker times its
+  run while stragglers are still starting.
 - **min statistic over ≥3 reps** (BEAMIUM_BENCH_STAT=median to switch):
   for a capability/ceiling measurement the minimum is the unbiased
   estimate — every source of noise on a busy microVM inflates, never
@@ -151,8 +152,8 @@ def _spread(samples: list[float]) -> str:
 
 def main() -> None:
     # the driver-side merge session's JVM outlives spark.stop() (py4j keeps
-    # the process) — cap ITS pinned heap too, or a 16g Xms+AlwaysPreTouch
-    # JVM idles alongside every later timed level
+    # the process) — cap ITS heap too, so the heap it grew during the merge
+    # stays bounded while it idles alongside every later timed level
     os.environ.setdefault("BEAMIUM_SPARK_DRIVER_MEM", "6g")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/"))[2:])
@@ -259,7 +260,7 @@ N=1 → 4N=4 executor processes (8 cores each) over the same sf={sf}
 input, disjoint file shards, decomposable-tuple merge included.
 
 Harness discipline (see scripts/multi_executor_bench.py docstring):
-{WORKER_HEAP} pinned worker heaps, warm-up BARRIER before every timed
+{WORKER_HEAP} worker heap ceilings, warm-up BARRIER before every timed
 section, {stat_name} over {runs} reps, per-rep spread published.
 
 | | N = 1 executor | 4N = 4 executors |

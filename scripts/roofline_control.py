@@ -40,11 +40,11 @@ def run_workers(shards: list[list[str]], tag: str) -> list[dict]:
 
     procs = []
     outs = []
-    # 6g pinned+pre-touched per worker: enough for a 4 GB shard scan, and
-    # 4 concurrent workers stay well inside the box across repeated runs.
+    # a 6g heap ceiling per worker: enough for a 4 GB shard scan, and 4
+    # concurrent workers stay well inside the box across repeated runs.
     # The warm-up barrier (BEAMIUM_BENCH_GO) keeps any worker's timed
-    # section from overlapping another's JVM startup / AlwaysPreTouch /
-    # warm-up — the same discipline as multi_executor_bench.
+    # section from overlapping another's JVM startup / warm-up — the same
+    # discipline as multi_executor_bench.
     go_file = os.path.join(tempfile.gettempdir(), f"roofline_go_{tag}")
     if os.path.exists(go_file):
         os.remove(go_file)
@@ -91,9 +91,10 @@ def best_level(shards, tag, runs):
     """min over runs of (max over concurrent executors). A ceiling
     measurement wants the best sustainable time: concurrent workers start
     unsynchronized, so a run can be disturbed by another level's JVM
-    teardown or a straggler's AlwaysPreTouch zeroing 10 GB through the
-    same memory bus — the min filters that startup skew out (observed:
-    a disturbed 4-way scan read 28 s where the clean one reads 5 s)."""
+    teardown or a straggler's startup on the same cores and memory bus —
+    the min filters that startup skew out (observed, when worker heaps
+    were still pre-touched: a disturbed 4-way scan read 28 s where the
+    clean one reads 5 s)."""
     samples = []
     for r in range(runs):
         res = run_workers(shards, f"{tag}{r}")

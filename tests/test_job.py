@@ -135,6 +135,60 @@ def test_kill_and_replay_equals_uninterrupted(spark, pages_path, tmp_path):
         _assert_same(killed.tier(tier), ref.tier(tier))
 
 
+_TZ_CHILD = """
+import sys
+sys.path.insert(0, {repo!r})
+from beamium_spark.session import get_spark
+from beamium_spark.plans.job import AlertRule, JobConf, RollupJob
+spark = get_spark(app_name="tz-child", master="local[4]", shuffle_partitions=4)
+conf = JobConf(
+    bucket_mode="site", write_blocks=False,
+    alert_rules=[AlertRule(metric="doc_count", threshold=1.0, op=">", for_windows=2)],
+)
+job = RollupJob(spark, {pages!r}, {root!r}, conf)
+job.run(max_chunks=3)
+job.run(max_chunks=3)
+spark.stop()
+"""
+
+
+def test_tiers_do_not_depend_on_driver_time_zone(spark, pages_path, tmp_path):
+    """``collect()`` hands the driver naive timestamps in its local zone
+    while the store keys partitions by UTC hour: a driver 14 hours ahead
+    of UTC (so most pending hours fall on another local date) writes the
+    same tiers as a UTC driver, and a UTC driver resumes its checkpoint
+    log at the chunk it stopped at."""
+    import os
+    import subprocess
+    import sys
+
+    from beamium_spark.plans.job import AlertRule
+    from beamium_spark.sources.tables import ParquetTierStore
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    root = str(tmp_path / "tz")
+    proc = subprocess.run(
+        [sys.executable, "-c", _TZ_CHILD.format(repo=repo, pages=pages_path, root=root)],
+        env={**os.environ, "TZ": "Pacific/Kiritimati"},
+        capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+
+    conf = JobConf(
+        bucket_mode="site", write_blocks=False,
+        alert_rules=[AlertRule(metric="doc_count", threshold=1.0, op=">", for_windows=2)],
+    )
+    ref = RollupJob(spark, pages_path, str(tmp_path / "ref"), conf)
+    chunks = ref.pending_chunks()
+    ref.run()
+    resumed = RollupJob(spark, pages_path, root, conf)
+    assert resumed.pending_chunks() == chunks[6:]
+    resumed.run()
+    got = ParquetTierStore(spark, root)
+    for tier in ("rollup_1m", "rollup_1h", "rollup_1d", "alerts"):
+        assert _rows(got.read(tier)) == _rows(ref.store.read(tier)), tier
+
+
 def test_replay_after_data_write_without_manifest(spark, pages_path, tmp_path):
     """Kill between tier write and fence → chunk is replayed and the
     idempotent overwrite leaves no duplicates. The torn log is made
