@@ -426,7 +426,9 @@ class RollupJob:
         Both counters ride the write via ``observe()`` on the tier frame,
         below the store's hash exchange, which runs its child once. Fresh
         Observation per attempt: a backoff retry re-runs the closure and an
-        Observation is single-use."""
+        Observation is single-use. An empty frame writes nothing and posts
+        no metrics (AQE plans it as an empty relation, so no task runs the
+        observer): its Observation holds an empty row, read as 0 rows."""
         from pyspark.sql import Observation
 
         result: dict[str, int] = {}
@@ -442,7 +444,8 @@ class RollupJob:
                 table,
                 "chunk_start",
             )
-            result.update(ob.get)
+            empty = ob._jo.getRow().length() == 0
+            result.update({"n": 0, "points": 0} if empty else ob.get)
 
         commit_with_retry(_attempt)
         return result["n"], result["points"]

@@ -35,8 +35,13 @@ def get_spark(
     not a tuning choice: the hour chunk keys (``date_trunc("hour", ...)``,
     ``to_date`` and the ``chunk_key`` partition names) and
     ``decode_blocks``' naive pandas timestamps follow the session time
-    zone, so a session in another zone shifts every hour. Nothing checks
-    it; a host application's session must set it too.
+    zone, so a session in another zone shifts every hour.
+    ``ParquetTierStore`` rejects any other zone; a host application's
+    session must set it too.
+
+    No parquet codec is pinned: ``ParquetTierStore`` sets its own layout
+    on every write it makes, and any other parquet write takes Spark's
+    default (snappy).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     mem = os.environ.get("BEAMIUM_SPARK_DRIVER_MEM", "16g")
@@ -60,7 +65,6 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         # parquet timestamp[us] (no tz) → TIMESTAMP in UTC session, matching

@@ -25,7 +25,11 @@ plain parquet directories:
   no retention path uses them;
 - small driver-side files (the checkpoint log, ``plans/checkpoint.py``)
   are written ``.<name>.tmp`` then renamed, beamium's atomic mark
-  (src/scraper.rs:249-265).
+  (src/scraper.rs:249-265);
+- every parquet file the store writes has the same layout under any
+  session (``_write``): zstd pages, and no min/max statistics on the
+  opaque block blobs. Files of another codec read as they are and are
+  re-encoded when a replay or compaction rewrites their partition.
 
 Every maintenance path (listing, TTL unlink, rewrite swap, compaction
 file counts) goes through the **Hadoop FileSystem API** resolved from
@@ -179,6 +183,38 @@ class ParquetTierStore:
                 if not is_dir:
                     self._delete(f"{root}/{e}")
 
+    #: the store's parquet layout, as writer options so that no session
+    #: conf changes a file's bytes. ``ts_block``/``val_block`` are opaque
+    #: Gorilla blobs no reader prunes on: their min/max would copy up to
+    #: two blobs into every footer. ``bucket`` and ``metric`` keep their
+    #: statistics, which the clustered writes exist to make selective
+    #: (``window_start`` is INT96, for which parquet keeps none).
+    WRITE_OPTIONS = {
+        "compression": "zstd",
+        "parquet.column.statistics.enabled#ts_block": "false",
+        "parquet.column.statistics.enabled#val_block": "false",
+    }
+
+    def _write(
+        self,
+        df: DataFrame,
+        path: str,
+        mode: str = "overwrite",
+        partition_col: str | None = None,
+    ) -> None:
+        """The one parquet write of this store, files capped at
+        ``max_records_per_file`` rows. A partitioned overwrite is dynamic,
+        set on the writer: a host session's default STATIC mode would
+        replace the whole table with ``df``'s partitions."""
+        w = df.write.mode(mode).options(**self.WRITE_OPTIONS).option(
+            "maxRecordsPerFile", self.max_records_per_file
+        )
+        if partition_col is not None:
+            w = w.option("partitionOverwriteMode", "dynamic").partitionBy(
+                partition_col
+            )
+        w.parquet(path)
+
     def path(self, table: str) -> str:
         return f"{self.root}/{table}"
 
@@ -233,11 +269,7 @@ class ParquetTierStore:
             out = out.repartition("chunk_key").sortWithinPartitions(
                 "chunk_key", *cluster
             )
-        out.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).option(
-            "maxRecordsPerFile", self.max_records_per_file
-        ).partitionBy("chunk_key").parquet(self.path(table))
+        self._write(out, self.path(table), partition_col="chunk_key")
         # what a read infers: the data columns, then the partition column
         self._schemas[table] = T.StructType(
             [T.StructField(f.name, f.dataType, True, f.metadata)
@@ -247,23 +279,16 @@ class ParquetTierStore:
 
     def append(self, df: DataFrame, table: str) -> None:
         self._schemas.pop(table, None)
-        df.write.mode("append").parquet(self.path(table))
+        self._write(df, self.path(table), mode="append")
 
     def overwrite_partition(self, df: DataFrame, table: str, part_col: str) -> None:
         """Dynamic partition overwrite on an existing column — replaces
         exactly the ``part_col=...`` partitions present in ``df`` (the
-        epoch-fencing primitive for streaming sinks).
-
-        The dynamic mode is set on the writer itself, NOT inherited from
-        the session: a host application's SparkSession defaults to STATIC
-        overwrite, under which this write would silently truncate the
-        whole table to the current frame's rows (the round-3 gate's red
-        row). Writer-level options take precedence over the session conf,
-        so the store is safe to embed in any session."""
+        epoch-fencing primitive for streaming sinks). The dynamic mode is
+        the writer's (``_write``), never the session's, so the store is
+        safe to embed in any session."""
         self._schemas.pop(table, None)
-        df.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy(part_col).parquet(self.path(table))
+        self._write(df, self.path(table), partition_col=part_col)
 
     def partitions(self, table: str) -> dict[str, tuple[int, int]]:
         """chunk_key → (parquet files, on-disk bytes) of every
@@ -321,7 +346,7 @@ class ParquetTierStore:
                 kept = df.filter(~predicate).cache()
                 kept.count()  # materialize before clobbering the source
                 tmp = self.path(table) + ".rewrite"
-                kept.write.mode("overwrite").parquet(tmp)
+                self._write(kept, tmp)
                 kept.unpersist()
                 fs, dst = self._fs_path(self.path(table))
                 fs.delete(dst, True)
@@ -343,11 +368,8 @@ class ParquetTierStore:
         keep_keys = {r["chunk_key"] for r in kept.select("chunk_key").distinct().collect()}
         if keep_keys:
             # dynamic overwrite replaces exactly the partitions present in
-            # the written frame; set on the writer so a host session's
-            # default STATIC mode can't truncate unrelated partitions
-            kept.write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy("chunk_key").parquet(self.path(table))
+            # the written frame
+            self._write(kept, self.path(table), partition_col="chunk_key")
         affected.unpersist()
         for key in set(hit_keys) - keep_keys:
             self._delete(f"{self.path(table)}/chunk_key={key}")
@@ -366,7 +388,10 @@ class ParquetTierStore:
         form); default compacts the whole table. Rewrites go through the
         same dynamic partition overwrite as data writes, so a killed
         compaction leaves either the old or the new file set, never a
-        mix. Returns {files_before, files_after, chunks}. (Iceberg:
+        mix. The rewrite re-encodes each partition in the store's layout
+        (``WRITE_OPTIONS``) whatever codec its files had, so
+        ``compact_chunks(table)`` migrates a whole table at once.
+        Returns {files_before, files_after, chunks}. (Iceberg:
         ``rewrite_data_files`` is the engine-side equivalent.)"""
         root = self.path(table)
         if not self.exists(table):
@@ -390,11 +415,7 @@ class ParquetTierStore:
         df = df.repartition("chunk_key").cache()
         df.count()
         try:
-            df.write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).option(
-                "maxRecordsPerFile", self.max_records_per_file
-            ).partitionBy("chunk_key").parquet(root)
+            self._write(df, root, partition_col="chunk_key")
         finally:
             df.unpersist()
         after = _count_files(keys)

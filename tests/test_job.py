@@ -216,6 +216,26 @@ def test_replay_after_data_write_without_manifest(spark, pages_path, tmp_path):
     assert job.pending_chunks() == []
 
 
+def test_tick_that_extracts_no_points_commits_its_chunk(spark, pages_path, tmp_path):
+    """A chunk whose pages yield no point (a whitelist matching no
+    metric) writes empty tiers: the tick commits it with forwarded=0, so
+    neither this job nor a fresh one on the same state pends it again."""
+    from beamium_spark.operators.extract import METRICS
+
+    state = str(tmp_path / "s")
+    conf = JobConf(bucket_mode="site", metric_whitelist="^nomatch$")
+    job = RollupJob(spark, pages_path, state, conf)
+    first = job.pending_chunks()[0]
+    r = job.run(max_chunks=1)
+    assert r["chunks"] == 1
+    assert (r["forwarded"], r["forwarded_1h"], r["forwarded_1d"]) == (0, 0, 0)
+    assert r["filtered"] == r["scraped"] * len(METRICS) > 0
+    assert first not in job.pending_chunks()
+    assert first not in RollupJob(spark, pages_path, state, conf).pending_chunks()
+    ctr = {row["tier"]: row for row in job.counters().collect()}
+    assert ctr["rollup_1m"]["forwarded"] == 0
+
+
 def test_salted_job_equals_unsalted(spark, pages_path, tmp_path):
     a = RollupJob(spark, pages_path, str(tmp_path / "a"),
                   JobConf(bucket_mode="site", salt_factor=8, write_blocks=False))
