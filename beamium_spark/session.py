@@ -74,46 +74,27 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # driver memory is a ceiling (-Xmx), not a reservation: G1 commits
-        # the heap the work touches (about 1.2 GiB of a 2 GiB cap after
-        # a four-chunk catch-up), so the 16 GiB default starts on a
-        # smaller host. Large G1 regions keep multi-KiB binary cells from
-        # being humongous allocations.
+        # the heap the work touches, so the 16 GiB default starts on a
+        # smaller host. G1 also picks its region size from the ceiling
+        # (1 MiB at 2 GiB, 8 MiB at 16 GiB). A pinned 32 MiB region grew
+        # and kept each space in 32 MiB steps: about 360 MB more peak
+        # memory on perfbench's 2 GiB driver. Smaller regions make more
+        # objects humongous (half a region and up) and add GC pauses, but
+        # moved no query or tick latency beyond run-to-run spread.
         # ActiveProcessorCount pins JVM-internal pools (GC, JIT, ForkJoin)
-        # to the executor's core share instead of the whole box — exactly
-        # what a cluster container's cpuset gives an executor JVM; without
-        # it, co-located executor JVMs each spawn 32-core GC/JIT pools and
-        # trample each other (BEAMIUM_JVM_PROCS overrides; default = cores
-        # of the local[N] master).
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:G1HeapRegionSize=32m "
-            f"-XX:ActiveProcessorCount={os.environ.get('BEAMIUM_JVM_PROCS', cores)}",
-        )
+        # to the master's cores instead of the whole box — exactly what a
+        # cluster container's cpuset gives an executor JVM; without it,
+        # co-located executor JVMs each spawn 32-core GC/JIT pools and
+        # trample each other.
+        .config("spark.driver.extraJavaOptions", f"-XX:ActiveProcessorCount={cores}")
         # fat-binary parquet scans (multi-KiB html/text cells) are bound by
         # per-batch byte[] churn, not I/O: off-heap column vectors take the
         # scan buffers out of the GC's hands and 512-row batches keep each
         # vector ~7 MB for 14 KiB cells (4096-row default OOMs the reader on
         # this data; measured r6: 5.4s → 4.4s for the 15 GB two-column
         # scan). Narrow-row tables see no measurable difference at 512.
-        .config(
-            "spark.sql.parquet.columnarReaderBatchSize",
-            os.environ.get("BEAMIUM_PARQUET_BATCH", "512"),
-        )
-        .config(
-            "spark.sql.columnVector.offheap.enabled",
-            os.environ.get("BEAMIUM_COLVEC_OFFHEAP", "true"),
-        )
-        # Split size stays at Spark's 128 MB default but is surfaced as a
-        # knob: r6 measured 64 MB buying ~5% on the fat-binary scans (finer
-        # tail balancing) while COSTING ~20% on slim-column scans of the
-        # same files (twice the task/footer overhead for ~5 MB of actual
-        # column bytes) — a wash the 128 MB default resolves in favor of
-        # the common case. Clusters with different file/core geometry tune
-        # via env.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("BEAMIUM_MAX_PARTITION_BYTES", "128m"),
-        )
+        .config("spark.sql.parquet.columnarReaderBatchSize", "512")
+        .config("spark.sql.columnVector.offheap.enabled", "true")
     )
     # vendored-jar seam (e.g. a local iceberg-spark-runtime jar where the
     # package can't resolve): comma-separated jar paths

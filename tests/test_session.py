@@ -1,6 +1,7 @@
 """The session factory's driver memory setting is a heap ceiling: the JVM
-starts without reserving or zero-filling it, so the heap it commits
-follows the work, and the 16 GiB default starts on a smaller host."""
+starts without reserving or zero-filling it, and G1 sizes its own heap
+regions from that ceiling, so the heap it commits follows the work, and
+the 16 GiB default starts on a smaller host."""
 
 import os
 import subprocess
@@ -10,11 +11,17 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_driver_heap_is_neither_pinned_nor_pretouched(spark):
-    mx = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
-    args = list(mx.getInputArguments())
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    args = list(mf.getRuntimeMXBean().getInputArguments())
     assert [a for a in args if a.startswith("-Xmx")], args
     assert not [a for a in args if a.startswith("-Xms")], args
     assert "-XX:+AlwaysPreTouch" not in args, args
+    assert not [a for a in args if a.startswith("-XX:G1HeapRegionSize")], args
+    diag = mf.getPlatformMXBean(
+        spark._jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    region = diag.getVMOption("G1HeapRegionSize")
+    assert region.getOrigin().toString() != "VM_CREATION", region.toString()
 
 
 _CHILD = """\
