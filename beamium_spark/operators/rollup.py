@@ -313,6 +313,7 @@ def session_rollup(
     watermark). An external SQL engine reproduces it with the classic
     gaps-and-islands window (lag + cumulative new-session flag), which
     is what the correctness oracle does."""
+    window_seconds(gap)  # raises on a bad gap, where session_window returns no rows
     w = F.session_window(F.col(ts_col), gap)
     return (
         points.groupBy(*keys, w.alias("w"))

@@ -36,6 +36,8 @@ read path:
 from __future__ import annotations
 
 import datetime as dt
+import inspect
+import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -55,6 +57,49 @@ from beamium_spark.operators.rollup import (
 _TIER_SECONDS = (("rollup_1d", 86400), ("rollup_1h", 3600), ("rollup_1m", 60))
 
 _AGGS = ("avg", "sum", "min", "max", "cnt")
+
+_SHAPING = ("smooth", "rate", "ewma", "decompose", "alert", "anomaly")
+
+#: The optional parameters each read kind of ``query()`` takes; any other
+#: one set away from its default raises ValueError before the store is
+#: read. Only tier rows carry the (cnt, sum, min, max) tuple that ``agg``
+#: picks from and ``fill`` carries (a zero or carried percentile is not a
+#: percentile); ``distinct`` is one global series; ``m4`` and
+#: ``session`` return their own schema, with no ``value`` to shape.
+_TAKES = {
+    "tier": ("agg", "fill", "bucket", *_SHAPING),
+    "stat": ("stat", "bucket", "blocks_table", *_SHAPING),
+    "approx": ("stat", "approx", "bucket", *_SHAPING),
+    "distinct": ("stat", *_SHAPING),
+    "m4": ("render", "bucket", "blocks_table"),
+    "session": ("session_gap", "bucket", "blocks_table"),
+}
+
+#: parameters that only mean something beside another one
+_NEEDS = {"alert_op": "alert", "alert_for": "alert", "anomaly_threshold": "anomaly"}
+
+#: shaping no read takes together: smooth and rate both rewrite ``value``,
+#: which ewma annotates
+_EXCLUSIVE = (("smooth", "rate"), ("ewma", "smooth"), ("ewma", "rate"))
+
+#: value domains no operator downstream checks (ewma, decompose and
+#: alert_op are checked by tier_ewma, tier_decompose and tier_alert_rule)
+_DOMAINS = {
+    "agg": (lambda v: v in _AGGS, f"one of {_AGGS}"),
+    "smooth": (lambda v: v >= 1, ">= 1"),
+    "rate": (lambda v: v in (True, "counter"), "False, True or 'counter'"),
+    "stat": (lambda v: v == "distinct" or re.fullmatch(r"p\d{1,2}(\.\d+)?", v),
+             "'distinct' or look like 'p95'"),
+    "render": (lambda v: v == "m4", "'m4'"),
+    "anomaly": (lambda v: v >= 2, ">= 2 steps (the baseline width)"),
+    "alert_for": (lambda v: v >= 1, ">= 1"),
+}
+
+#: the 1h tiers two read kinds re-roll, and the JobConf field that keeps each
+_HOUR_TIERS = {
+    "distinct": ("distinct_1h", "distinct_lgk"),
+    "approx": ("hist_1h", "histogram_bin_width"),
+}
 
 
 def parse_step(step: str | int) -> int:
@@ -123,6 +168,38 @@ def _blocks_points(
     return _in_range(decode_blocks(b), start, end, "ts")
 
 
+def _read_kind(args: dict) -> str:
+    """The read kind ``query()``'s ``args`` select. Raises ValueError for
+    a parameter set away from its default that the kind does not take
+    (``_TAKES``, ``_NEEDS``), an ``_EXCLUSIVE`` pair, or a value outside
+    its ``_DOMAINS`` entry."""
+    given = {p for p, default in _DEFAULTS.items() if args[p] != default}
+    kind = (
+        "m4" if "render" in given
+        else "session" if "session_gap" in given
+        else "tier" if "stat" not in given
+        else "distinct" if args["stat"] == "distinct"
+        else "approx" if args["approx"]
+        else "stat"
+    )
+    takes = set(_TAKES[kind])
+    takes |= {p for p, needed in _NEEDS.items() if needed in given & takes}
+    bad = [p for p in _DEFAULTS if p in given - takes]
+    if bad:
+        raise ValueError(f"{kind} reads are exclusive with " + ", ".join(
+            f"{p} without {_NEEDS[p]}" if _NEEDS.get(p, p) not in given else p
+            for p in bad
+        ))
+    for a, b in _EXCLUSIVE:
+        if a in given and b in given:
+            raise ValueError(f"{a} and {b} are mutually exclusive")
+    for p in given & _DOMAINS.keys():
+        ok, want = _DOMAINS[p]
+        if not ok(args[p]):
+            raise ValueError(f"{p} must be {want}, got {args[p]!r}")
+    return kind
+
+
 def query(
     store,
     metric: str,
@@ -155,7 +232,13 @@ def query(
     width in steps (applied to ``value`` after agg/fill); ``rate`` =
     True for per-second delta of ``value``, ``'counter'`` for
     counter-reset semantics (negative delta → the new value is the
-    increase). ``smooth`` and ``rate`` are mutually exclusive.
+    increase).
+
+    Which parameters each read kind (tier re-roll, ``stat``, ``approx``
+    stat, ``stat='distinct'``, ``render='m4'``, ``session_gap``) takes is
+    this module's ``_TAKES`` table: any other parameter set away from its
+    default, a parameter of ``_NEEDS`` without the one it needs, and an
+    ``_EXCLUSIVE`` pair raise ValueError before the store is read.
 
     ``value`` on the rows ``fill`` adds (``filled`` is true), per
     strategy: ``zero`` emits 0.0 for every ``agg``; ``linear``
@@ -166,9 +249,7 @@ def query(
     ``stat='pNN[.N]'`` (e.g. 'p95') switches the value to an exact
     interpolated percentile recomputed from the raw-fidelity block store
     (``blocks_table``), chunk-pruned to the range — decomposable tier
-    tuples can't answer it. ``agg`` is ignored on that path; ``fill``
-    is rejected (a zero/carried percentile is not a percentile);
-    ``smooth``/``rate`` compose as usual.
+    tuples can't answer it.
 
     ``stat='p95', approx=True`` answers the percentile from the
     decomposable ``hist_1h`` histogram tier instead (maintained by the
@@ -184,8 +265,7 @@ def query(
     ``JobConf.distinct_lgk`` is set): per-hour sketches union to any
     hour-multiple step (``hll_union_agg`` — decomposable, never
     re-touching raw pages) and the value is the estimate. The series is
-    global (bucket 0, metric 'distinct_urls'); ``metric``/``bucket``
-    are ignored, ``fill`` is rejected.
+    global (bucket 0, metric 'distinct_urls'); ``metric`` is ignored.
 
     ``anomaly=k`` annotates the final series with rolling z-score alert
     columns (``base_avg``/``base_std``/``base_n``/``zscore``/
@@ -198,8 +278,7 @@ def query(
     the recursive exponentially-weighted average
     (:func:`~beamium_spark.operators.rollup.tier_ewma`, adjust-False) of
     ``value`` per series, left-joined back so fill columns survive.
-    Exclusive with ``smooth``/``rate`` (they rewrite ``value``; ewma
-    annotates), composes with ``anomaly`` (which still reads ``value``).
+    Composes with ``anomaly`` (which still reads ``value``).
 
     ``decompose=period`` annotates the shaped series with ``trend``/
     ``seasonal``/``remainder`` columns — classical additive seasonal
@@ -222,89 +301,44 @@ def query(
     timestamps — operators/downsample.py), recomputed from the
     chunk-pruned raw-fidelity block store because pixel-exact rendering
     needs real point times, which fixed-grid tier rows truncated away.
-    Use ``step`` = range/chart-width. Returns the M4 wide schema;
-    agg/fill/smooth/rate/stat/session_gap do not apply and are rejected
-    if combined.
+    Use ``step`` = range/chart-width. Returns the M4 wide schema.
 
     ``session_gap='5 minutes'`` answers SESSION reads the same way:
     activity bursts recomputed from the chunk-pruned block store via
     ``session_rollup`` (gap merging cannot re-roll from fixed-grid tier
     rows whose real point times were truncated). Returns (bucket,
-    metric, session_start, session_end, cnt, sum_value); step/agg/fill/
-    smooth/rate/stat do not apply and are rejected if combined.
+    metric, session_start, session_end, cnt, sum_value); sessions have
+    no step grid, so ``step`` is ignored.
     """
-    if smooth is not None and rate:
-        raise ValueError("smooth and rate are mutually exclusive")
-    if ewma is not None and (smooth is not None or rate):
-        raise ValueError("ewma is exclusive with smooth/rate")
-    if ewma is not None and not (0.0 < ewma <= 1.0):
-        raise ValueError(f"ewma must be an alpha in (0, 1], got {ewma}")
-    if anomaly is not None and anomaly < 2:
-        raise ValueError(f"anomaly baseline width must be >= 2 steps, got {anomaly}")
-    if decompose is not None and decompose < 2:
-        raise ValueError(f"decompose period must be >= 2 steps, got {decompose}")
-    if alert is not None and alert_for < 1:
-        raise ValueError(f"alert_for must be >= 1, got {alert_for}")
-    if smooth is not None and smooth < 1:
-        raise ValueError(f"smooth must be >= 1, got {smooth}")
-    if rate not in (False, True, "counter"):
-        raise ValueError(f"rate must be False, True or 'counter', got {rate!r}")
+    kind = _read_kind(locals())
     if isinstance(start, str):
         start = dt.datetime.fromisoformat(start)
     if isinstance(end, str):
         end = dt.datetime.fromisoformat(end)
-    if agg not in _AGGS:
-        raise ValueError(f"agg must be one of {_AGGS}, got {agg!r}")
     step_s = parse_step(step)
     step_w = f"{step_s} seconds"
 
-    if render is not None:
-        if render != "m4":
-            raise ValueError(f"render must be 'm4', got {render!r}")
-        if (
-            stat is not None
-            or fill is not None
-            or smooth is not None
-            or rate
-            or anomaly is not None
-            or session_gap is not None
-            or ewma is not None
-            or decompose is not None
-            or alert is not None
-        ):
-            raise ValueError(
-                "render is exclusive with stat/fill/smooth/rate/anomaly/"
-                "ewma/decompose/alert/session_gap"
-            )
+    if kind in ("m4", "session"):
+        pts = _blocks_points(store, blocks_table, metric, start, end, bucket)
+        if kind == "session":
+            return session_rollup(pts, gap=session_gap)
         from beamium_spark.operators.downsample import m4_downsample
 
-        pts = _blocks_points(store, blocks_table, metric, start, end, bucket)
         return m4_downsample(pts, window=step_w)
 
-    if session_gap is not None:
-        if stat is not None or fill is not None or smooth is not None or rate \
-                or anomaly is not None or ewma is not None \
-                or decompose is not None or alert is not None:
-            raise ValueError(
-                "session_gap is exclusive with stat/fill/smooth/rate/"
-                "anomaly/ewma/decompose/alert"
-            )
-        pts = _blocks_points(store, blocks_table, metric, start, end, bucket)
-        return session_rollup(pts, gap=session_gap)
-
-    if stat == "distinct":
-        if fill is not None:
-            raise ValueError("fill is not supported with distinct stats")
-        if not store.exists("distinct_1h"):
-            raise ValueError(
-                "distinct reads need the 'distinct_1h' sketch tier "
-                "(set JobConf.distinct_lgk)"
-            )
+    if kind in _HOUR_TIERS:
+        table, field = _HOUR_TIERS[kind]
         if step_s % 3600 != 0:
             raise ValueError(
-                "distinct reads union the 1h sketch tier — step must be "
-                "a multiple of 1 hour"
+                f"{kind} reads re-roll the 1h '{table}' tier — step must be "
+                f"a multiple of 1 hour"
             )
+        if not store.exists(table):
+            raise ValueError(
+                f"{kind} reads need the '{table}' tier (set JobConf.{field})"
+            )
+
+    if kind == "distinct":
         d = _read_range(store, "distinct_1h", start, end)
         out = (
             d.groupBy(window_start("window_start", step_w).alias("window_start"))
@@ -316,103 +350,75 @@ def query(
                 F.hll_sketch_estimate("sk").cast("double").alias("value"),
             )
         )
-        return _shape(out, smooth, rate, step_s, anomaly, anomaly_threshold,
-                      ewma, decompose, alert, alert_op, alert_for)
-
-    if stat is not None:
-        import re as _re
-
-        m = _re.fullmatch(r"p(\d{1,2}(?:\.\d+)?)", stat)
-        if not m:
-            raise ValueError(f"stat must look like 'p95', got {stat!r}")
-        if fill is not None:
-            raise ValueError("fill is not supported with percentile stats")
-        qfrac = float(m.group(1)) / 100.0
-        if approx:
-            if step_s % 3600 != 0:
-                raise ValueError(
-                    "approx stat reads re-roll the 1h histogram tier — "
-                    "step must be a multiple of 1 hour"
-                )
-            if not store.exists("hist_1h"):
-                raise ValueError(
-                    "approx stat read needs the 'hist_1h' tier "
-                    "(set JobConf.histogram_bin_width)"
-                )
-            h = _read_range(store, "hist_1h", start, end, metric, bucket)
-            # self-describing width (control-plane single-row read)
-            wrow = h.select("bin_width").first()
-            width = float(wrow[0]) if wrow else 1.0
-            re_binned = (
-                h.groupBy(
-                    "bucket", "metric",
-                    window_start("window_start", step_w).alias("window_start"),
-                    "bin", "bin_lo",
-                )
-                .agg(F.sum("cnt").alias("cnt"))
+    elif kind == "approx":
+        h = _read_range(store, "hist_1h", start, end, metric, bucket)
+        # self-describing width (control-plane single-row read)
+        wrow = h.select("bin_width").first()
+        width = float(wrow[0]) if wrow else 1.0
+        re_binned = (
+            h.groupBy(
+                "bucket", "metric",
+                window_start("window_start", step_w).alias("window_start"),
+                "bin", "bin_lo",
             )
-            out = histogram_quantile(re_binned, qfrac, width)
-            return _shape(out, smooth, rate, step_s, anomaly,
-                          anomaly_threshold, ewma, decompose, alert,
-                          alert_op, alert_for)
+            .agg(F.sum("cnt").alias("cnt"))
+        )
+        out = histogram_quantile(re_binned, float(stat[1:]) / 100.0, width)
+    elif kind == "stat":
+        qfrac = float(stat[1:]) / 100.0
         pts = _blocks_points(store, blocks_table, metric, start, end, bucket)
         out = (
             pts.groupBy("bucket", "metric", window_start("ts", step_w).alias("window_start"))
             .agg(F.expr(f"percentile(value, {qfrac!r})").alias("value"))
         )
-        return _shape(out, smooth, rate, step_s, anomaly,
-                      anomaly_threshold, ewma, decompose, alert,
-                      alert_op, alert_for)
+    else:
+        tier_name, _tier_s = select_tier(store, step_s)
 
-    tier_name, _tier_s = select_tier(store, step_s)
-
-    t = _read_range(store, tier_name, start, end, metric, bucket)
-    re_rolled = (
-        t.groupBy("bucket", "metric", window_start("window_start", step_w).alias("window_start"))
-        .agg(*merge_tuples())
-    )
-    if fill is not None:
-        from beamium_spark.operators.gapfill import gapfill
-
-        if step_s not in (60, 3600, 86400):
-            raise ValueError("fill requires a 1m/1h/1d step")
-        re_rolled = gapfill(
-            re_rolled,
-            step_w,
-            strategy=fill,
-            bounds=(start, end - dt.timedelta(seconds=step_s)),
+        t = _read_range(store, tier_name, start, end, metric, bucket)
+        re_rolled = (
+            t.groupBy("bucket", "metric", window_start("window_start", step_w).alias("window_start"))
+            .agg(*merge_tuples())
         )
+        if fill is not None:
+            from beamium_spark.operators.gapfill import gapfill
 
-    value = {
-        # NULL, not a divide-by-zero, on the cnt=0 rows fill='linear' makes
-        "avg": F.col("sum_value") / F.nullif(F.col("cnt"), F.lit(0)),
-        "sum": F.col("sum_value"),
-        "min": F.col("min_value"),
-        "max": F.col("max_value"),
-        "cnt": F.col("cnt").cast("double"),
-    }[agg]
-    if fill == "zero":
-        value = F.when(F.col("filled"), F.lit(0.0)).otherwise(value)
-    cols = ["bucket", "metric", "window_start", value.alias("value")]
-    if fill is not None:
-        cols.append("filled")
-    return _shape(re_rolled.select(*cols), smooth, rate, step_s, anomaly,
-                  anomaly_threshold, ewma, decompose, alert, alert_op,
-                  alert_for)
+            if step_s not in (60, 3600, 86400):
+                raise ValueError("fill requires a 1m/1h/1d step")
+            re_rolled = gapfill(
+                re_rolled,
+                step_w,
+                strategy=fill,
+                bounds=(start, end - dt.timedelta(seconds=step_s)),
+            )
+
+        value = {
+            # NULL, not a divide-by-zero, on the cnt=0 rows fill='linear' makes
+            "avg": F.col("sum_value") / F.nullif(F.col("cnt"), F.lit(0)),
+            "sum": F.col("sum_value"),
+            "min": F.col("min_value"),
+            "max": F.col("max_value"),
+            "cnt": F.col("cnt").cast("double"),
+        }[agg]
+        if fill == "zero":
+            value = F.when(F.col("filled"), F.lit(0.0)).otherwise(value)
+        cols = ["bucket", "metric", "window_start", value.alias("value")]
+        if fill is not None:
+            cols.append("filled")
+        out = re_rolled.select(*cols)
+    return _shape(out, step_s, smooth, rate, ewma, decompose, alert, alert_op,
+                  alert_for, anomaly, anomaly_threshold)
+
+
+_DEFAULTS = {
+    name: p.default
+    for name, p in inspect.signature(query).parameters.items()
+    if name in _NEEDS or any(name in takes for takes in _TAKES.values())
+}
 
 
 def _shape(
-    out: DataFrame,
-    smooth: int | None,
-    rate: bool | str,
-    step_s: int,
-    anomaly: int | None = None,
-    anomaly_threshold: float = 3.0,
-    ewma: float | None = None,
-    decompose: int | None = None,
-    alert: float | None = None,
-    alert_op: str = ">",
-    alert_for: int = 3,
+    out: DataFrame, step_s: int, smooth, rate, ewma, decompose, alert,
+    alert_op, alert_for, anomaly, anomaly_threshold,
 ) -> DataFrame:
     """Post-aggregation smoothing / rate / anomaly annotation shared by
     the tier and percentile read paths — per-series window passes over the
@@ -434,32 +440,22 @@ def _shape(
             else raw_delta
         )
         out = out.withColumn("value", delta / F.lit(float(step_s)))
-    if ewma is not None:
-        e = tier_ewma(
-            out.select("bucket", "metric", "window_start", "value"),
-            alpha=ewma,
-            value_col="value",
-        ).select("bucket", "metric", "window_start", "ewma")
-        # dashboard-sized frames; annotate without disturbing fill columns
-        out = out.join(e, ["bucket", "metric", "window_start"], "left")
-    if decompose is not None:
-        d = tier_decompose(
-            out.select("bucket", "metric", "window_start", "value"),
-            period=decompose,
-            window=f"{step_s} seconds",
-            value_col="value",
-        ).select("bucket", "metric", "window_start", "trend", "seasonal", "remainder")
-        out = out.join(d, ["bucket", "metric", "window_start"], "left")
-    if alert is not None:
-        a = tier_alert_rule(
-            out.select("bucket", "metric", "window_start", "value"),
-            threshold=alert,
-            op=alert_op,
-            for_windows=alert_for,
-            window=f"{step_s} seconds",
-            value_col="value",
-        ).select("bucket", "metric", "window_start", "state", "streak")
-        out = out.join(a, ["bucket", "metric", "window_start"], "left")
+    # annotations read the shaped value and join back by key, so the fill
+    # columns survive (dashboard-sized frames)
+    keys, window = ["bucket", "metric", "window_start"], f"{step_s} seconds"
+    for param, annotate, cols in (
+        (ewma, lambda s: tier_ewma(s, alpha=ewma, value_col="value"), ["ewma"]),
+        (decompose,
+         lambda s: tier_decompose(s, period=decompose, window=window, value_col="value"),
+         ["trend", "seasonal", "remainder"]),
+        (alert,
+         lambda s: tier_alert_rule(s, threshold=alert, op=alert_op, for_windows=alert_for,
+                                   window=window, value_col="value"),
+         ["state", "streak"]),
+    ):
+        if param is not None:
+            a = annotate(out.select(*keys, "value")).select(*keys, *cols)
+            out = out.join(a, keys, "left")
     if anomaly is not None:
         out = tier_anomalies(
             out,

@@ -310,6 +310,8 @@ def test_query_session_read_from_blocks(spark, store):
     with pytest.raises(ValueError, match="exclusive"):
         query(store, "act", t0, t0 + dt.timedelta(hours=1),
               session_gap="5 minutes", smooth=2)
+    with pytest.raises(ValueError, match="unsupported window"):
+        query(store, "act", t0, t0 + dt.timedelta(hours=1), session_gap="nonsense")
 
 
 def test_query_m4_render_from_blocks(spark, store):
@@ -497,3 +499,110 @@ def test_query_alert_annotation(store):
     with _pytest.raises(ValueError, match="alert_for"):
         query(store, "doc_count", t0, t0 + dt.timedelta(hours=1),
               alert=3.0, alert_for=0)
+
+
+#: one read of each kind, keyed as in query's _TAKES table
+_GRID_KINDS = {
+    "tier": {},
+    "stat": {"stat": "p95"},
+    "approx": {"stat": "p95", "approx": True},
+    "distinct": {"stat": "distinct"},
+    "m4": {"render": "m4", "step": "15 minutes"},
+    "session": {"session_gap": "5 minutes"},
+}
+
+#: each parameter away from its default (the dependents beside theirs),
+#: then the exclusive pairs, which no kind takes
+_GRID_PARAMS = {
+    "agg": {"agg": "sum"},
+    "fill": {"fill": "zero"},
+    "bucket": {"bucket": 0},
+    "blocks_table": {"blocks_table": "blocks_copy"},
+    "smooth": {"smooth": 2},
+    "rate": {"rate": True},
+    "ewma": {"ewma": 0.5},
+    "decompose": {"decompose": 2},
+    "alert": {"alert": 1.0, "alert_op": "<", "alert_for": 2},
+    "anomaly": {"anomaly": 2, "anomaly_threshold": 2.0},
+    "smooth+rate": {"smooth": 2, "rate": True},
+    "ewma+smooth": {"ewma": 0.5, "smooth": 2},
+    "ewma+rate": {"ewma": 0.5, "rate": True},
+}
+
+_GRID_T0 = dt.datetime(2025, 1, 1)
+
+
+@pytest.fixture(scope="module")
+def grid_store(bare_spark, tmp_path_factory):
+    """Every table query() reads, written once by the bare session: the
+    1m/1h tiers, the block store (also as ``blocks_copy``), ``hist_1h``
+    with its ``bin_width`` column as RollupJob writes it, and
+    ``distinct_1h``."""
+    from beamium_spark.operators.blocks import encode_blocks
+    from beamium_spark.operators.rollup import distinct_tier, rollup_histogram
+
+    st = _tier_store(bare_spark, str(tmp_path_factory.mktemp("grid") / "store"))
+    pts = bare_spark.createDataFrame(
+        [(0, "doc_count", _GRID_T0 + dt.timedelta(minutes=m, seconds=7), float(m % 5))
+         for m in range(0, 180, 2)],
+        "bucket int, metric string, ts timestamp, value double",
+    )
+    for table in ("blocks", "blocks_copy"):
+        st.write_chunks(encode_blocks(pts, "1 hour"), table)
+    hist = (
+        rollup_histogram(pts, "1 hour", 1.0)
+        .withColumn("bin_width", F.lit(1.0))
+        .withColumn("chunk_start", F.col("window_start"))
+    )
+    st.write_chunks(hist, "hist_1h", "chunk_start")
+    pages = pts.select(
+        F.format_string("https://u%d.example/", (F.col("value") * 3).cast("int")).alias("url"),
+        F.col("ts").alias("warc_ts"),
+    )
+    t1h = distinct_tier(pages, "1 hour").withColumn("chunk_start", F.col("window_start"))
+    st.write_chunks(t1h, "distinct_1h", "chunk_start")
+    return st
+
+
+@pytest.mark.parametrize("param", list(_GRID_PARAMS))
+@pytest.mark.parametrize("kind", list(_GRID_KINDS))
+def test_query_grid_follows_the_table(grid_store, kind, param):
+    """Each read kind collects rows with each parameter its _TAKES entry
+    lists and raises ValueError for every other one and for the exclusive
+    pairs."""
+    from beamium_spark.plans.query import _TAKES
+
+    args = (grid_store, "doc_count", _GRID_T0, _GRID_T0 + dt.timedelta(hours=3))
+    kw = {**_GRID_KINDS[kind], **_GRID_PARAMS[param]}
+    if param in _TAKES[kind]:
+        assert query(*args, **kw).collect()
+    else:
+        with pytest.raises(ValueError, match="exclusive"):
+            query(*args, **kw)
+
+
+class _UnreadStore:
+    """A store that fails any use: the rejections come before a read."""
+
+    def __getattr__(self, name):
+        raise AssertionError(f"store.{name} used")
+
+
+@pytest.mark.parametrize("kw", [
+    {"approx": True, "stat": None},
+    {"approx": True, "stat": "distinct"},
+    {"approx": True, "render": "m4"},
+    {"approx": True, "session_gap": "5 minutes"},
+    {"stat": "distinct", "bucket": 0},
+    {"alert_op": "<"},
+    {"alert_for": 2},
+    {"anomaly_threshold": 2.0},
+    {"stat": "p95", "agg": "sum"},
+    {"render": "m4", "agg": "max"},
+    {"session_gap": "5 minutes", "agg": "cnt"},
+], ids=str)
+def test_query_rejects_ignored_parameters(kw):
+    """Parameters the read kind would ignore raise before the store is
+    touched."""
+    with pytest.raises(ValueError, match="exclusive"):
+        query(_UnreadStore(), "doc_count", _GRID_T0, _GRID_T0 + dt.timedelta(hours=3), **kw)
