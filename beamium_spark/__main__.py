@@ -151,27 +151,31 @@ def main(argv: list[str] | None = None) -> int:
         from beamium_spark.sources.tables import ParquetTierStore
 
         store = ParquetTierStore(spark, args.state)
-        df = query(
-            store,
-            args.metric,
-            args.start,
-            args.end,
-            step=args.step,
-            agg=args.agg,
-            fill=args.fill,
-            bucket=args.bucket,
-            smooth=args.smooth,
-            rate={"delta": True, "counter": "counter"}.get(args.rate, False),
-            stat=args.stat,
-            session_gap=args.session_gap,
-            anomaly=args.anomaly,
-            ewma=args.ewma,
-            render=args.render,
-            decompose=args.decompose,
-            alert=args.alert,
-            alert_op=args.alert_op,
-            alert_for=args.alert_for,
-        )
+        try:
+            df = query(
+                store,
+                args.metric,
+                args.start,
+                args.end,
+                step=args.step,
+                agg=args.agg,
+                fill=args.fill,
+                bucket=args.bucket,
+                smooth=args.smooth,
+                rate={"delta": True, "counter": "counter"}.get(args.rate, False),
+                stat=args.stat,
+                session_gap=args.session_gap,
+                anomaly=args.anomaly,
+                ewma=args.ewma,
+                render=args.render,
+                decompose=args.decompose,
+                alert=args.alert,
+                alert_op=args.alert_op,
+                alert_for=args.alert_for,
+            )
+        except ValueError as e:  # a parameter the read cannot take
+            print(f"--query: {e}", file=sys.stderr)
+            return 2
         order = ("session_start" if args.session_gap
                  else "ws" if args.render else "window_start")
         df = df.orderBy("bucket", "metric", order)
@@ -232,11 +236,13 @@ def main(argv: list[str] | None = None) -> int:
         if not sources:
             print("--scrape requires at least one --source name=dir", file=sys.stderr)
             return 2
-        daemon = ScrapeDaemon(
-            spark, conf, sources, args.state, now_us=int(time.time() * 1_000_000)
-        )
+        daemon = ScrapeDaemon(spark, conf, sources, args.state, now_us=0)
         ticks = 0
         while args.max_ticks is None or ticks < args.max_ticks:
+            # the scrape time is taken per pass, as ``now_iso`` is: untimed
+            # samples of a file take the clock of the pass that first
+            # parses it (the log keeps that stamp for replays)
+            daemon.now_us = time.time_ns() // 1000
             report = daemon.run_once()
             report["retention"] = daemon.apply_retention(now_iso())
             report["compaction"] = daemon.compact_if_needed()

@@ -74,8 +74,9 @@ def transcompile_sensision(line: Column) -> Column:
 
 def parse_prometheus(df: DataFrame, line_col: str, now_us: int) -> DataFrame:
     """Lines → columns (ts_us, cls, labels map, value string), dropped rows
-    filtered out. ``now_us`` is the batch-constant scrape time (one value per
-    pass, transcompiler.rs:16-22)."""
+    filtered out; the other columns of ``df`` lead, unchanged. ``now_us``
+    is the batch-constant scrape time (one value per pass,
+    transcompiler.rs:16-22)."""
     line = F.trim(F.col(line_col))
     has_labels = line.contains("{")
     # class part: up to last '}' if labeled, else the first token
@@ -110,6 +111,7 @@ def parse_prometheus(df: DataFrame, line_col: str, now_us: int) -> DataFrame:
             & ~value.isin("+Inf", "-Inf", "nan", "NaN")
         )
         .select(
+            *[c for c in df.columns if c != line_col],
             ts_us.alias("ts_us"),
             url_encode_rfc3986(cls_name).alias("cls"),
             F.map_from_entries(

@@ -9,11 +9,14 @@ and deletion waits for a confirmed forward (src/lib/asynch/http.rs:
 small JSON segments under ``<state_root>/_log/``, written and read by the
 driver through the store's Hadoop FileSystem — no Spark job:
 
-- directory scan     → ``files`` records: each source file seen (path,
-                       length, mtime) and the hour-chunks it holds
+- directory scan     → ``discover``, the one discovery both drivers
+                       call: list the source files, scan only those the
+                       log has never seen, and append a ``files`` record
+                       with each file's id (path, length, mtime) and the
+                       hour-chunks it holds
 - seen-set difference → Python set arithmetic over the log
                        (``Manifest.pending``): chunks never committed,
-                       or whose source fingerprint changed since commit
+                       or whose set of source files changed since commit
 - atomic ``*.tmp``    → each segment is written ``.<name>.tmp`` then
                        renamed; readers skip dot-files, so a kill leaves
                        no partial segment
@@ -33,8 +36,10 @@ driver through the store's Hadoop FileSystem — no Spark job:
 
 A segment is ``{"run_id", "at", "records": [...]}``; a record is one of
 ``{"event", "info"}``, ``{"commit": tier, "chunks", "scraped",
-"filtered", "forwarded"}``, ``{"baseline": {chunk: fingerprint}}`` or
-``{"files": {file id: [chunk, ...]}}``. Chunks are ISO timestamps.
+"filtered", "forwarded"}``, ``{"baseline": {chunk: file-set digest}}`` or
+``{"files": {file id: [chunk, ...]}[, "stamp": µs]}``; the scrape daemon's
+``stamp`` is the scrape time its first parse gave samples that carry no
+timestamp. Chunks are ISO timestamps (naive UTC).
 Segments are named ``<seq>-<run_id>.json`` and read in ``seq`` order;
 later baselines supersede earlier ones.
 """
@@ -42,13 +47,18 @@ later baselines supersede earlier ones.
 from __future__ import annotations
 
 import datetime as dt
+import hashlib
 import json
 import random
 import time
 import uuid
-from collections import Counter
+from collections import Counter, defaultdict
+from dataclasses import dataclass
+from functools import reduce
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 LOG_DIR = "_log"
 
@@ -76,9 +86,9 @@ def event_record(event: str, info: str = "") -> dict:
 
 
 def baseline_record(fingerprints: dict) -> dict:
-    """Per-chunk source fingerprint at commit (a file-set digest for the
-    job, a point count for the daemon): a committed chunk whose live
-    fingerprint differs is replayed."""
+    """Per-chunk digest of the source files that held the chunk at its
+    commit (``Discovery.fingerprints``): a committed chunk whose live
+    digest differs is replayed."""
     return {"baseline": {c.isoformat(): v for c, v in fingerprints.items()}}
 
 
@@ -154,6 +164,14 @@ class Manifest:
                 out[fid] = [dt.datetime.fromisoformat(c) for c in chunks]
         return out
 
+    def file_stamps(self) -> dict[str, int]:
+        """file id → the scrape time stamped on its untimed samples, for
+        the files of ``files`` records that carry a ``stamp``."""
+        return {
+            fid: r["stamp"] for r in self._records("files") if "stamp" in r
+            for fid in r["files"]
+        }
+
     def pending(self, fingerprints: dict, tiers: list[str]) -> list:
         """Chunks of ``fingerprints`` (chunk → live source fingerprint)
         not committed for every tier in ``tiers``, or whose fingerprint
@@ -202,6 +220,111 @@ class Manifest:
             [(tier, *v) for tier, v in sorted(tot.items())],
             "tier string, chunks long, scraped long, filtered long, forwarded long",
         )
+
+
+def utc_wall(t: dt.datetime) -> dt.datetime:
+    """A collected Spark timestamp as naive UTC wall time, the clock of
+    the store's ``chunk_key`` and of ``to_date`` in the UTC session.
+    ``collect()`` returns naive datetimes in the driver process's local
+    zone whatever the session zone."""
+    return dt.datetime.fromtimestamp(t.timestamp(), dt.timezone.utc).replace(tzinfo=None)
+
+
+def utc_lit(t: dt.datetime):
+    """A timestamp literal of a naive UTC wall time: PySpark reads a
+    naive ``datetime`` as the driver's local time."""
+    return F.lit(t.replace(tzinfo=dt.timezone.utc))
+
+
+# ---- discovery: the one both drivers call ----------------------------------
+
+
+@dataclass
+class Discovery:
+    """What one ``discover`` pass found."""
+
+    pending: list  # chunks to (re)play, sorted
+    fingerprints: dict  # chunk → digest of the ids of the listed files holding it
+    files: dict  # listed file id → (root prefix, path under the root)
+    touching: dict  # chunk → ids of the listed files holding it
+    new: list  # ids of the files this pass scanned
+    scanned: list  # ``scan``'s frames over them, one per root
+
+
+def discover(
+    manifest: Manifest, roots: dict, scan, tiers: list[str], stamp: int | None = None
+) -> Discovery:
+    """Work by source file, as beamium's router keeps the set of files it
+    has seen and reads only new ones (src/router.rs:56-77).
+
+    ``roots`` maps a file-id prefix to a source directory. A file's id is
+    ``<prefix><path under the root>|<length>|<mtime ms>``, so a file
+    replaced at the same path is a new file. Files the log has never seen
+    are scanned, in one Spark job: ``scan(prefix, paths)`` returns a frame
+    with a ``ts`` timestamp and a ``file`` column (the reader's
+    ``input_file_name()``) over the files ``paths`` of one root. The hours
+    each file holds go to the log in one ``files`` record, with ``stamp``
+    when given. Pending are the chunks not committed for every tier in
+    ``tiers`` and the committed chunks whose set of files changed since
+    their commit: late-arriving, replaced and removed files replay
+    exactly their chunks. A pass with no new file runs no Spark job."""
+    store = manifest.store
+    files = {
+        f"{prefix}{path}|{size}|{mtime}": (prefix, path)
+        for prefix, root in roots.items()
+        for path, size, mtime in store.list_files(root)
+    }
+    seen = manifest.source_files()
+    new = sorted(fid for fid in files if fid not in seen)
+    scanned = []
+    if new:
+        by_root = defaultdict(list)
+        for fid in new:
+            by_root[files[fid][0]].append(files[fid][1])
+        frames = {
+            prefix: scan(prefix, [f"{roots[prefix].rstrip('/')}/{p}" for p in paths])
+            for prefix, paths in by_root.items()
+        }
+        scanned = list(frames.values())
+        rows = (
+            reduce(DataFrame.unionByName, [
+                df.select(F.lit(prefix).alias("root"), "file", "ts")
+                for prefix, df in frames.items()
+            ])
+            .filter(F.col("ts").isNotNull())
+            .groupBy("root", "file")
+            .agg(F.collect_set(F.date_trunc("hour", "ts")).alias("chunks"))
+            .collect()
+        )
+        # the reader names a file by its qualified URI; an id holds the
+        # path under the file's root
+        qualified = {}
+        for prefix in frames:
+            fs, root = store._fs_path(roots[prefix].rstrip("/"))
+            qualified[prefix] = fs.makeQualified(root).toUri().getPath().rstrip("/") + "/"
+        held = {
+            (r["root"], unquote(urlparse(r["file"]).path)[len(qualified[r["root"]]):]):
+                sorted(map(utc_wall, r["chunks"]))
+            for r in rows
+        }
+        found = {fid: held.get(files[fid], []) for fid in new}
+        record = {"files": {fid: [c.isoformat() for c in cs] for fid, cs in found.items()}}
+        if stamp is not None:
+            record["stamp"] = stamp
+        manifest.append("discover", [record])
+        seen = {**seen, **found}
+    touching = defaultdict(list)
+    for fid in sorted(files):
+        for c in seen[fid]:
+            touching[c].append(fid)
+    fingerprints = {
+        c: hashlib.sha1("\n".join(fids).encode()).hexdigest()[:16]
+        for c, fids in touching.items()
+    }
+    return Discovery(
+        manifest.pending(fingerprints, tiers), fingerprints, files, dict(touching),
+        new, scanned,
+    )
 
 
 def new_run_id() -> str:

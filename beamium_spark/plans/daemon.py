@@ -11,14 +11,20 @@ eviction, and a config change restarts everything from on-disk state.
   ``sensision`` GTS lines (passthrough parse, P2) — with the scraper's
   metric whitelist (F3, src/scraper.rs:204-208) and per-scraper labels
   (src/conf.rs:260-264) applied on read;
-- the router pass applies global labels and writes one selector-filtered
+- work discovery is the job's (``checkpoint.discover``): each source
+  file is identified by (path, length, mtime) and parsed once, by the
+  first pass that lists it, in its scraper's dialect; the hours it holds
+  go to the log with that pass's scrape time. Pending are the hours not
+  committed for EVERY sink, plus committed hours whose set of source
+  files changed (late, replaced or removed files), as beamium re-forwards
+  any new file in a scanned directory (src/router.rs:56-77);
+- the router pass writes the pending hours from the pass's cached parse
+  of its new files plus a re-read of the earlier files that hold a
+  pending hour, applies global labels and writes one selector-filtered
   copy per sink (R1/F4, plans/router.py), then lands one fence segment
-  in the checkpoint log (every sink's commit record, the per-chunk
-  point-count baseline and ``run_complete``) — beamium's
-  delete-after-all-writes;
-- work discovery: source hour-chunks not committed for EVERY sink, plus
-  committed chunks whose point count drifted from the baseline (a crash
-  mid-route replays the chunk into all sinks idempotently — dynamic
+  in the checkpoint log (every sink's commit record, the hours' file-set
+  baseline and ``run_complete``) — beamium's delete-after-all-writes. A
+  crash mid-route replays the hours into all sinks idempotently (dynamic
   partition overwrite);
 - per-sink retention maps the sink's ``ttl``/``size`` to a
   ``RetentionPolicy`` and runs the job's own retention pass (K4/K5,
@@ -27,15 +33,19 @@ eviction, and a config change restarts everything from on-disk state.
   reload (src/main.rs:148-205): state lives in the store, so a restarted
   daemon resumes exactly where the old one stopped.
 
-Scale notes: everything dataflow-heavy is one cached points DataFrame per
-pass; discovery is one count per chunk, compared with the log on the
-driver. The scrape "tick" (src/scraper.rs:90) is the caller's loop
-cadence — each ``run_once`` is one micro-batch.
+Scale notes: a pass parses its new files once, in discovery's one Spark
+job, which fills the cache every sink write reads; a pass with no new
+file and nothing to replay starts no Spark job. The scrape "tick"
+(src/scraper.rs:90) is the caller's loop cadence — each ``run_once`` is
+one micro-batch, and ``now_us`` (settable between passes) is its scrape
+time.
 """
 
 from __future__ import annotations
 
+from collections import defaultdict
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,8 +54,10 @@ from beamium_spark.conf import EngineConf, ScraperConf
 from beamium_spark.plans.checkpoint import (
     Manifest,
     baseline_record,
+    discover,
     event_record,
     new_run_id,
+    utc_lit,
 )
 from beamium_spark.plans.job import RetentionPolicy, compaction_pass, retention_pass
 from beamium_spark.plans.router import route_multicast
@@ -70,82 +82,109 @@ class ScrapeDaemon:
         self.spark = spark
         self.conf = conf
         self.sources = sources
-        self.now_us = now_us  # batch-constant scrape time (P5)
+        self.now_us = now_us  # the pass's scrape time (P5)
         self.store = ParquetTierStore(spark, state_root)
         self.manifest = Manifest(self.store)
+        # a file id leads with its source's ``name=dir/``: two sources
+        # holding files of the same name keep distinct ids
+        self._sources = {f"{s.conf.name}={s.path.rstrip('/')}/": s for s in sources}
+        self._discovery = None
 
     # ---- scrape (S1/S4 + P1/P2 + F1-F3 + per-scraper P3) ------------------
 
-    def scrape_points(self) -> DataFrame:
+    def scrape_points(self, prefix: str, paths: list[str], now_us: int) -> DataFrame:
+        """The text files ``paths`` of the source ``prefix`` names, parsed in
+        its dialect → (file, ts, metric, labels, value), with the
+        scraper's whitelist and labels applied. Untimed Prometheus samples
+        take ``now_us``; sensision sources read only ``*.metrics`` files."""
         from beamium_spark.functions.labels import add_labels, remove_labels
-        from beamium_spark.sources.gts import read_gts, read_prometheus
+        from beamium_spark.sources.gts import scan_gts, scan_prometheus
 
-        parts = []
-        for src in self.sources:
-            sc = src.conf
-            whitelist = "|".join(sc.metrics) if sc.metrics else None
-            if sc.format == "sensision":
-                pts = read_gts(
-                    self.spark, src.path, metric_whitelist=whitelist,
-                    continuation=True, metrics_only=True,
-                )
-            else:
-                pts = read_prometheus(
-                    self.spark, src.path, now_us=self.now_us,
-                    metric_whitelist=whitelist,
-                )
-            if sc.labels:
-                pts = pts.withColumn("labels", add_labels(F.col("labels"), sc.labels))
-            if sc.drop_label_keys:  # scraper filtered_labels (scraper.rs:212)
-                pts = pts.withColumn(
-                    "labels", remove_labels(F.col("labels"), sc.drop_label_keys)
-                )
-            parts.append(pts.select("ts", "metric", "labels", "value"))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        sc = self._sources[prefix].conf
+        if sc.format == "sensision":
+            pts = scan_gts(self.spark, paths, continuation=True, metrics_only=True)
+        else:
+            pts = scan_prometheus(self.spark, paths, now_us)
+        if sc.metrics:
+            pts = pts.filter(F.col("metric").rlike("|".join(sc.metrics)))
+        if sc.labels:
+            pts = pts.withColumn("labels", add_labels(F.col("labels"), sc.labels))
+        if sc.drop_label_keys:  # scraper filtered_labels (scraper.rs:212)
+            pts = pts.withColumn(
+                "labels", remove_labels(F.col("labels"), sc.drop_label_keys)
+            )
+        return pts.select("file", "ts", "metric", "labels", "value")
 
-    # ---- discovery (R2): chunks not yet committed for every sink ----------
+    # ---- discovery (R2): the job's, over the text sources -----------------
 
-    def pending_chunks(self, points: DataFrame) -> list:
-        """Chunks not committed for ALL sinks (beamium only deletes the
+    def pending_chunks(self) -> list:
+        """Hours not committed for ALL sinks (beamium only deletes the
         source file after every sink write, src/router.rs:86-104), plus
-        late lines in an already-routed hour: a committed chunk replays
-        when its point count drifts from the fence-time baseline (beamium
-        re-forwards any new file regardless of its timestamps)."""
-        rows = (
-            points.groupBy(F.date_trunc("hour", "ts").alias("chunk_start"))
-            .agg(F.count("*").alias("n_points"))
-            .collect()
+        committed hours whose set of source files changed. Parses the
+        files no pass has seen, once, into a cache the route pass reads;
+        the log records the hours each holds and this pass's ``now_us``."""
+        self._drop_parse()
+        self._discovery = discover(
+            self.manifest,
+            {prefix: src.path for prefix, src in self._sources.items()},
+            lambda prefix, paths: self.scrape_points(prefix, paths, self.now_us).cache(),
+            [s.table for s in self.conf.sinks],
+            stamp=self.now_us,
         )
-        self._counts = {
-            r["chunk_start"]: r["n_points"] for r in rows if r["chunk_start"] is not None
-        }
-        return self.manifest.pending(self._counts, [s.table for s in self.conf.sinks])
+        return self._discovery.pending
+
+    def _drop_parse(self) -> None:
+        """Release the cached parse of the last discovery."""
+        for df in self._discovery.scanned if self._discovery else []:
+            df.unpersist()
 
     def _record_chunk_counts(self, pending: list) -> dict:
-        """The late-data baseline for the fence: the point counts this
-        pass's discovery saw for ``pending``."""
-        return baseline_record({c: self._counts[c] for c in pending})
+        """The fence's baseline: the file-set digest of each pending hour.
+        The name dates from the point-count baseline this replaced; the
+        benchmark's tracer still wraps it by that name."""
+        return baseline_record({c: self._discovery.fingerprints[c] for c in pending})
+
+    def _pending_points(self, pending: list) -> DataFrame:
+        """The points of the ``pending`` hours: this pass's cached parse of
+        its new files, plus a re-read of the earlier files that hold a
+        pending hour, each with the scrape time of its first parse."""
+        d = self._discovery
+        stamps = self.manifest.file_stamps()
+        earlier = defaultdict(list)
+        for fid in sorted({f for c in pending for f in d.touching[c]} - set(d.new)):
+            prefix, path = d.files[fid]
+            earlier[prefix, stamps[fid]].append(
+                f"{self._sources[prefix].path.rstrip('/')}/{path}"
+            )
+        parts = d.scanned + [
+            self.scrape_points(prefix, paths, stamp)
+            for (prefix, stamp), paths in earlier.items()
+        ]
+        return (
+            reduce(DataFrame.unionByName, parts)
+            .filter(F.date_trunc("hour", "ts").isin([utc_lit(c) for c in pending]))
+            .drop("file")
+        )
 
     # ---- one tick ----------------------------------------------------------
 
     def run_once(self) -> dict:
         run_id = new_run_id()
-        points = self.scrape_points()
-        pending = self.pending_chunks(points)
+        pending = self.pending_chunks()
         report: dict = {"run_id": run_id, "chunks": len(pending)}
-        if not pending:
-            report["forwarded"] = {}
+        try:
+            if not pending:
+                report["forwarded"] = {}
+                return report
+            self.manifest.record_event(run_id, "run_start", f"chunks={len(pending)}")
+            report["forwarded"] = route_multicast(
+                self._pending_points(pending), self.conf, self.store, self.manifest,
+                run_id, pending,
+                fence=[self._record_chunk_counts(pending), event_record("run_complete")],
+            )
             return report
-        self.manifest.record_event(run_id, "run_start", f"chunks={len(pending)}")
-        batch = points.filter(F.date_trunc("hour", "ts").isin(pending))
-        report["forwarded"] = route_multicast(
-            batch, self.conf, self.store, self.manifest, run_id, pending,
-            fence=[self._record_chunk_counts(pending), event_record("run_complete")],
-        )
-        return report
+        finally:
+            self._drop_parse()
 
     # ---- retention (K4/K5 per sink conf) -----------------------------------
 

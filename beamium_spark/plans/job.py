@@ -35,11 +35,7 @@ reason).
 
 from __future__ import annotations
 
-import datetime as dt
-import hashlib
-from collections import defaultdict
 from dataclasses import dataclass, field
-from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,8 +55,10 @@ from beamium_spark.plans.checkpoint import (
     baseline_record,
     commit_record,
     commit_with_retry,
+    discover,
     event_record,
     new_run_id,
+    utc_lit,
 )
 from beamium_spark.sources.tables import ParquetTierStore
 
@@ -159,20 +157,6 @@ class JobConf:
     )
 
 
-def _utc_wall(t: dt.datetime) -> dt.datetime:
-    """A collected Spark timestamp as naive UTC wall time, the clock of
-    the store's ``chunk_key`` and of ``to_date`` in the UTC session.
-    ``collect()`` returns naive datetimes in the driver process's local
-    zone whatever the session zone."""
-    return dt.datetime.fromtimestamp(t.timestamp(), dt.timezone.utc).replace(tzinfo=None)
-
-
-def _utc_lit(t: dt.datetime):
-    """A timestamp literal of a naive UTC wall time: PySpark reads a
-    naive ``datetime`` as the driver's local time."""
-    return F.lit(t.replace(tzinfo=dt.timezone.utc))
-
-
 class RollupJob:
     def __init__(
         self,
@@ -193,58 +177,23 @@ class RollupJob:
         """The source pages: every read of the source goes through here."""
         return self.spark.read.schema(PAGES_SCHEMA).parquet(self.pages_path)
 
-    def _scan_chunks(self, files: list[str]) -> dict[str, list]:
-        """relative path → hour-chunks it holds (naive UTC wall time, as
-        every chunk the driver keeps), for ``files``: one Spark job over
-        their ``warc_ts``, grouped by ``input_file_name()``."""
-        base = self.pages_path.rstrip("/")
-        rows = (
-            self.spark.read.schema(PAGES_SCHEMA)
-            .parquet(*[f"{base}/{f}" for f in files])
-            .filter(F.col("warc_ts").isNotNull())
-            .groupBy(F.input_file_name().alias("f"))
-            .agg(F.collect_set(F.date_trunc("hour", "warc_ts")).alias("chunks"))
-            .collect()
-        )
-        fs, root = self.store._fs_path(base)
-        prefix = fs.makeQualified(root).toUri().getPath().rstrip("/") + "/"
-        found = {
-            unquote(urlparse(r["f"]).path)[len(prefix):]: sorted(map(_utc_wall, r["chunks"]))
-            for r in rows
-        }
-        return {f: found.get(f, []) for f in files}
-
     def pending_chunks(self) -> list:
         """New chunks (never committed) ∪ dirty chunks (the set of source
         files touching them changed since their commit) — both replayed
-        through the same idempotent path. A file is identified by
-        (path, length, mtime), so a file replaced at the same path is a
-        new file. Only never-seen files are scanned, and their chunks go
-        to the log: a tick with no new source file runs no Spark job."""
-        listed = {
-            f"{path}|{size}|{mtime}": path
-            for path, size, mtime in self.store.list_files(self.pages_path)
-        }
-        seen = self.manifest.source_files()
-        new = sorted(fid for fid in listed if fid not in seen)
-        if new:
-            by_path = self._scan_chunks([listed[fid] for fid in new])
-            found = {fid: by_path[listed[fid]] for fid in new}
-            self.manifest.append(
-                "discover",
-                [{"files": {fid: [c.isoformat() for c in cs] for fid, cs in found.items()}}],
-            )
-            seen = {**seen, **found}
-        touching = defaultdict(list)
-        for fid in sorted(listed):
-            for c in seen[fid]:
-                touching[c].append(fid)
+        through the same idempotent path. ``discover`` identifies a file
+        by (path, length, mtime), so a file replaced at the same path is a
+        new file; it scans the ``warc_ts`` of never-seen files only: a
+        tick with no new source file runs no Spark job."""
+        d = discover(
+            self.manifest, {"": self.pages_path},
+            lambda _, paths: self.spark.read.schema(PAGES_SCHEMA).parquet(*paths).select(
+                F.input_file_name().alias("file"), F.col("warc_ts").alias("ts")
+            ),
+            ["rollup_1m"],
+        )
         # the fence records the file sets this discovery saw
-        self._fingerprints = {
-            c: hashlib.sha1("\n".join(fids).encode()).hexdigest()[:16]
-            for c, fids in touching.items()
-        }
-        return self.manifest.pending(self._fingerprints, ["rollup_1m"])
+        self._fingerprints = d.fingerprints
+        return d.pending
 
     # ---- one micro-batch pass -------------------------------------------
 
@@ -263,9 +212,9 @@ class RollupJob:
         # range + set predicate: range reaches row-group stats, the isin
         # prunes interior committed chunks
         in_pending = (
-            (F.col("warc_ts") >= _utc_lit(lo))
-            & (F.col("warc_ts") < _utc_lit(hi) + F.expr("interval 1 hour"))
-            & F.date_trunc("hour", "warc_ts").isin([_utc_lit(c) for c in pending])
+            (F.col("warc_ts") >= utc_lit(lo))
+            & (F.col("warc_ts") < utc_lit(hi) + F.expr("interval 1 hour"))
+            & F.date_trunc("hour", "warc_ts").isin([utc_lit(c) for c in pending])
         )
         source = self.pages()
         pages = source.filter(in_pending)

@@ -65,13 +65,14 @@ _SHAPING = ("smooth", "rate", "ewma", "decompose", "alert", "anomaly")
 #: read. Only tier rows carry the (cnt, sum, min, max) tuple that ``agg``
 #: picks from and ``fill`` carries (a zero or carried percentile is not a
 #: percentile); ``distinct`` is one global series; ``m4`` and
-#: ``session`` return their own schema, with no ``value`` to shape.
+#: ``session`` return their own schema, with no ``value`` to shape, and
+#: sessions have no step grid.
 _TAKES = {
-    "tier": ("agg", "fill", "bucket", *_SHAPING),
-    "stat": ("stat", "bucket", "blocks_table", *_SHAPING),
-    "approx": ("stat", "approx", "bucket", *_SHAPING),
-    "distinct": ("stat", *_SHAPING),
-    "m4": ("render", "bucket", "blocks_table"),
+    "tier": ("step", "agg", "fill", "bucket", *_SHAPING),
+    "stat": ("step", "stat", "bucket", "blocks_table", *_SHAPING),
+    "approx": ("step", "stat", "approx", "bucket", *_SHAPING),
+    "distinct": ("step", "stat", *_SHAPING),
+    "m4": ("step", "render", "bucket", "blocks_table"),
     "session": ("session_gap", "bucket", "blocks_table"),
 }
 
@@ -174,6 +175,8 @@ def _read_kind(args: dict) -> str:
     (``_TAKES``, ``_NEEDS``), an ``_EXCLUSIVE`` pair, or a value outside
     its ``_DOMAINS`` entry."""
     given = {p for p, default in _DEFAULTS.items() if args[p] != default}
+    if parse_step(args["step"]) == parse_step(_DEFAULTS["step"]):
+        given.discard("step")  # 3600 and "60 minutes" are the default too
     kind = (
         "m4" if "render" in given
         else "session" if "session_gap" in given
@@ -308,7 +311,7 @@ def query(
     ``session_rollup`` (gap merging cannot re-roll from fixed-grid tier
     rows whose real point times were truncated). Returns (bucket,
     metric, session_start, session_end, cnt, sum_value); sessions have
-    no step grid, so ``step`` is ignored.
+    no step grid, so ``step`` must keep its default (one hour).
     """
     kind = _read_kind(locals())
     if isinstance(start, str):

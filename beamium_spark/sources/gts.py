@@ -11,6 +11,9 @@ switching from the reference can point these functions at the same files:
                         src/scraper.rs:249-265)
 - ``read_prometheus`` — Prometheus exposition text → points via the
                         transcompiler (the scrape-body path, S1/P1)
+- ``scan_gts`` / ``scan_prometheus`` — the same parses with a ``file``
+                        column naming each point's source file, which
+                        the scrape daemon's discovery keys on
 
 Filters applied on read mirror the scraper: comment/blank skip (F1),
 non-finite drop (F2), optional metric whitelist (F3), selector (F4).
@@ -49,25 +52,43 @@ def read_gts(
     carries class/labels forward with a per-file ordered window; safe at
     scale because beamium batches are ≤ batch-size (200 KB default,
     src/conf.rs:125) — many small files, never one huge one."""
+    out = scan_gts(spark, path, continuation, metrics_only).drop("file")
+    if metric_whitelist:
+        out = out.filter(F.col("metric").rlike(metric_whitelist))
+    if selector:
+        sel = selector if selector.startswith("^") else "^" + selector
+        out = out.filter(F.col("metric").rlike(sel))
+    return out
+
+
+def scan_gts(
+    spark: SparkSession,
+    path: str | list[str],
+    continuation: bool = False,
+    metrics_only: bool = False,
+) -> DataFrame:
+    """``read_gts`` before its whitelist and selector, with a leading
+    ``file`` column: each point's source file (``input_file_name()``).
+    ``path`` is a directory, a file or a list of them."""
     reader = spark.read
     if metrics_only:
         reader = reader.option("pathGlobFilter", "*.metrics")
     if continuation:
         whole = reader.text(path, wholetext=True)
         rows = whole.select(
-            F.input_file_name().alias("__f"),
+            F.input_file_name().alias("file"),
             F.posexplode(F.split(F.col("value"), "\n")).alias("__i", "line"),
         ).withColumn("line", F.trim("line"))
         rows = rows.filter((F.col("line") != "") & ~F.col("line").startswith("#"))
         is_cont = F.col("line").startswith("=")
         p = parse_gts_line(F.col("line"))
         w = (
-            Window.partitionBy("__f")
+            Window.partitionBy("file")
             .orderBy("__i")
             .rowsBetween(Window.unboundedPreceding, 0)
         )
         base = rows.select(
-            "__f",
+            "file",
             "__i",
             is_cont.alias("__c"),
             F.when(~is_cont, p).alias("p"),
@@ -75,6 +96,7 @@ def read_gts(
             F.regexp_extract("line", r"^=\d+//\s+(\S+)\s*$", 1).alias("__cval"),
         )
         parsed = base.select(
+            "file",
             F.when(F.col("__c"), F.col("__cts")).otherwise(F.col("p.ts_us")).alias("ts_us"),
             F.last(F.col("p.cls"), ignorenulls=True).over(w).alias("cls"),
             F.last(F.col("p.labels"), ignorenulls=True).over(w).alias("labels"),
@@ -86,24 +108,20 @@ def read_gts(
             (F.trim("line") != "") & ~F.trim(F.col("line")).startswith("#")
         )
         pp = parse_gts_line(F.trim(F.col("line")))
-        parsed = lines.select(pp.alias("p")).select(
+        parsed = lines.select(F.input_file_name().alias("file"), pp.alias("p")).select(
+            "file",
             F.col("p.ts_us").alias("ts_us"),
             F.col("p.cls").alias("cls"),
             F.col("p.labels").alias("labels"),
             F.col("p.value").alias("value_s"),
         )
-    out = parsed.select(
+    return parsed.select(
+        "file",
         F.timestamp_micros(F.col("ts_us")).alias("ts"),
         F.col("cls").alias("metric"),
         F.col("labels"),
         F.col("value_s").try_cast("double").alias("value"),
     ).filter(F.col("value").isNotNull() & ~F.isnan("value"))
-    if metric_whitelist:
-        out = out.filter(F.col("metric").rlike(metric_whitelist))
-    if selector:
-        sel = selector if selector.startswith("^") else "^" + selector
-        out = out.filter(F.col("metric").rlike(sel))
-    return out
 
 
 def write_gts(
@@ -138,14 +156,23 @@ def read_prometheus(
 ) -> DataFrame:
     """Prometheus exposition text files → typed points (the scrape path:
     fetch body → transcompile → filter, src/scraper.rs:184-219)."""
-    lines = spark.read.text(path).withColumnRenamed("value", "line")
-    cols = parse_prometheus(lines, "line", now_us)
-    out = cols.select(
+    out = scan_prometheus(spark, path, now_us).drop("file")
+    if metric_whitelist:
+        out = out.filter(F.col("metric").rlike(metric_whitelist))
+    return out
+
+
+def scan_prometheus(spark: SparkSession, path: str | list[str], now_us: int) -> DataFrame:
+    """``read_prometheus`` before its whitelist, with a leading ``file``
+    column: each point's source file (``input_file_name()``). ``path`` is
+    a directory, a file or a list of them."""
+    lines = spark.read.text(path).select(
+        F.input_file_name().alias("file"), F.col("value").alias("line")
+    )
+    return parse_prometheus(lines, "line", now_us).select(
+        "file",
         F.timestamp_micros(F.col("ts_us")).alias("ts"),
         F.col("cls").alias("metric"),
         "labels",
         F.col("value").try_cast("double").alias("value"),
     ).filter(F.col("value").isNotNull() & ~F.isnan("value"))
-    if metric_whitelist:
-        out = out.filter(F.col("metric").rlike(metric_whitelist))
-    return out

@@ -256,7 +256,9 @@ class ParquetTierStore:
         task, whose within-task sort makes its files consecutive slices
         of one sorted run — disjoint even when ``maxRecordsPerFile``
         splits the chunk. File- and row-group-level min/max stats then
-        prune reads filtered on bucket/metric, not just on time. The one
+        prune reads filtered on bucket/metric. Time pruning comes from the
+        ``chunk_key`` partitions alone: Spark writes ``window_start`` as
+        INT96, which parquet keeps no statistics for. The one
         exchange runs its child once (no sampling pass) and AQE sizes its
         reducers by the data. Leading the sort with chunk_key also
         satisfies the partitioned writer's required ordering, so Spark

@@ -340,3 +340,105 @@ def test_filtered_counts_the_points_the_1m_write_observed(spark, tmp_path, conf)
     assert job.tier("rollup_1m").agg(F.sum("cnt")).first()[0] == points > 0
     if conf.metric_whitelist:
         assert report["filtered"] > 0
+
+
+# ---- the scrape daemon shares the job's discovery ------------------------
+
+T0_MS = 1735689600000  # 2025-01-01T00:00:00Z
+
+
+def _prom(lines):
+    """Prometheus text: ``(metric, value, hour or None)`` samples; a None
+    hour leaves the sample untimed."""
+    return "".join(
+        f"{m} {v}\n" if h is None else f"{m} {v} {T0_MS + h * 3_600_000 + i}\n"
+        for i, (m, v, h) in enumerate(lines)
+    )
+
+
+def _daemon(spark, dirs, state, now_us):
+    from beamium_spark.conf import load_conf
+    from beamium_spark.plans.daemon import ScrapeDaemon, ScraperSource
+
+    conf = load_conf({
+        "scrapers": {"web": {"format": "prometheus"}},
+        "sinks": {"all": {"table": "all", "ttl": 30 * 24 * 3600}},
+    })
+    sources = [ScraperSource(conf.scrapers[0], str(d)) for d in dirs]
+    return ScrapeDaemon(spark, conf, sources, str(state), now_us)
+
+
+def _hours(hours):
+    return [dt.datetime(2025, 1, 1, h) for h in hours]
+
+
+def _sink_rows(daemon):
+    return sorted(
+        (r["metric"], r["value"], r["h"]) for r in daemon.store.read("all")
+        .select("metric", "value", F.date_format("ts", "HH").alias("h")).collect()
+    )
+
+
+def test_daemon_pass_with_no_new_file_starts_no_spark_job(spark, tmp_path):
+    """Two sources of one scraper hold a file of the same name, content
+    and mtime: both are routed. A second pass, with no new file, starts
+    no Spark job."""
+    dirs = [tmp_path / "p1", tmp_path / "p2"]
+    for d in dirs:
+        d.mkdir()
+        (d / "x.metrics").write_text(_prom([("m", 1, 0), ("m", 2, 1)]))
+        os.utime(d / "x.metrics", (1_700_000_000, 1_700_000_000))
+    daemon = _daemon(spark, dirs, tmp_path / "s", T0_MS * 1000)
+    first = daemon.run_once()
+    assert first["chunks"] == 2 and first["forwarded"] == {"all": 4}
+
+    started, report = _spark_jobs(spark, daemon.run_once)
+    assert report["chunks"] == 0 and started == set()
+
+
+def test_daemon_replaced_and_removed_files_replay_exactly_their_hours(spark, tmp_path):
+    prom = tmp_path / "prom"
+    prom.mkdir()
+    (prom / "a.metrics").write_text(_prom([("m", 1, 0), ("m", 2, 1)]))
+    (prom / "b.metrics").write_text(_prom([("m", 3, 2), ("m", 4, 2), ("m", 5, 3)]))
+    (prom / "late.metrics").write_text(_prom([("n", 6, 1)]))
+    daemon = _daemon(spark, [prom], tmp_path / "s", T0_MS * 1000)
+    assert daemon.run_once()["chunks"] == 4
+    assert daemon.pending_chunks() == []
+
+    # replaced at the same path: one sample fewer, the same hours
+    (prom / "b.metrics").write_text(_prom([("m", 3, 2), ("m", 5, 3)]))
+    assert daemon.pending_chunks() == _hours([2, 3])
+    assert daemon.run_once()["chunks"] == 2
+
+    # removed: its hour replays from the files left
+    os.remove(prom / "late.metrics")
+    assert daemon.pending_chunks() == _hours([1])
+    assert daemon.run_once()["chunks"] == 1
+    assert daemon.pending_chunks() == []
+
+    ref = _daemon(spark, [prom], tmp_path / "ref", T0_MS * 1000)
+    ref.run_once()
+    assert _sink_rows(daemon) == _sink_rows(ref) == [
+        ("m", 1.0, "00"), ("m", 2.0, "01"), ("m", 3.0, "02"), ("m", 5.0, "03")
+    ]
+
+
+def test_daemon_replay_keeps_untimed_samples_in_their_first_hour(spark, tmp_path):
+    """A file's untimed samples take the scrape time of the pass that
+    first parses it. A late file dirties that hour; the replay, by a
+    daemon built with a scrape time five hours on, re-reads the file with
+    its recorded time, so its samples stay where they were."""
+    prom = tmp_path / "prom"
+    prom.mkdir()
+    (prom / "a.metrics").write_text(_prom([("up", 1, None), ("m", 2, 0)]))
+    state = tmp_path / "s"
+    first = _daemon(spark, [prom], state, (T0_MS + 600_000) * 1000)
+    assert first.run_once()["chunks"] == 1
+
+    (prom / "late.metrics").write_text(_prom([("m", 3, 0)]))
+    later = _daemon(spark, [prom], state, (T0_MS + 5 * 3_600_000) * 1000)
+    assert later.pending_chunks() == _hours([0])
+    assert later.run_once()["chunks"] == 1
+    assert later.pending_chunks() == []
+    assert _sink_rows(later) == [("m", 2.0, "00"), ("m", 3.0, "00"), ("up", 1.0, "00")]

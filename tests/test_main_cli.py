@@ -128,6 +128,60 @@ def test_cli_daemon_retention_clock_advances(spark, tmp_path, capsys, monkeypatc
     assert len(calls) == 3
 
 
+def test_cli_daemon_scrape_time_is_taken_per_pass(spark, tmp_path, monkeypatch):
+    """Each daemon pass takes the scrape time anew: a file that arrives
+    before the second pass, two hours on, stamps its untimed sample with
+    that pass's hour, while the first file, re-read because the new file
+    also holds a sample of its hour, keeps the first pass's hour."""
+    import time as time_mod
+    import types
+
+    import beamium_spark.__main__ as main_mod
+
+    t0 = 1735689600  # 2025-01-01T00:00:00Z
+    d = tmp_path / "prom"
+    d.mkdir()
+    (d / "a.metrics").write_text("up 1\n")
+    clock = [t0 + 600]
+
+    def sleep(_s):
+        (d / "b.metrics").write_text(f"up 2\nlate 3 {t0 * 1000 + 1}\n")
+        clock[0] += 2 * 3600
+
+    monkeypatch.setattr(main_mod, "time", types.SimpleNamespace(
+        time_ns=lambda: clock[0] * 10**9, sleep=sleep, strftime=time_mod.strftime))
+    cfg = tmp_path / "engine.json"
+    cfg.write_text(json.dumps({
+        "scrapers": {"web": {"format": "prometheus"}},
+        "sinks": {"all": {"table": "all", "ttl": "48h"}},
+    }))
+    state = tmp_path / "state"
+    rc = main([
+        "--scrape", "--daemon", "--max-ticks", "2", "--config", str(cfg),
+        "--state", str(state), "--source", f"web={d}", "--now", "2025-01-01T03:00:00",
+    ])
+    assert rc == 0
+    rows = spark.read.parquet(str(state / "all")).selectExpr(
+        "metric", "value", "date_format(ts, 'HH') AS h").collect()
+    assert sorted(tuple(r) for r in rows) == [
+        ("late", 3.0, "00"), ("up", 1.0, "00"), ("up", 2.0, "02")]
+
+
+def test_cli_query_parameter_error_is_a_usage_error(spark, tmp_path, capsys):
+    """A ValueError from query() is a one-line error on stderr, exit 2."""
+    state = str(tmp_path / "state")
+    rc = main([
+        "--state", state, "--query", "--metric", "doc_count",
+        "--start", "2025-01-01T00:00:00", "--end", "2025-01-01T03:00:00",
+        "--smooth", "2", "--rate", "delta",
+    ])
+    assert rc == 2
+    err = capsys.readouterr().err
+    assert "Traceback" not in err
+    assert [l for l in err.splitlines() if l.startswith("--query")] == [
+        "--query: smooth and rate are mutually exclusive"]
+
+
 def test_cli_curate_mode(spark, tmp_path, capsys):
     docs_path = str(tmp_path / "docs")
     good = (

@@ -508,12 +508,14 @@ _GRID_KINDS = {
     "approx": {"stat": "p95", "approx": True},
     "distinct": {"stat": "distinct"},
     "m4": {"render": "m4", "step": "15 minutes"},
-    "session": {"session_gap": "5 minutes"},
+    # 3600 s is the default "1 hour" step, which a session read keeps
+    "session": {"session_gap": "5 minutes", "step": 3600},
 }
 
 #: each parameter away from its default (the dependents beside theirs),
 #: then the exclusive pairs, which no kind takes
 _GRID_PARAMS = {
+    "step": {"step": "2 hours"},
     "agg": {"agg": "sum"},
     "fill": {"fill": "zero"},
     "bucket": {"bucket": 0},
