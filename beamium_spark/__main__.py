@@ -140,8 +140,10 @@ def main(argv: list[str] | None = None) -> int:
         # per-TICK wall clock (unless pinned by --now for tests): a daemon's
         # TTL eviction cutoff must advance with time, like the reference's
         # per-pass `now` (src/sink.rs:101-146) — computing it once at
-        # process start would freeze retention and grow sinks unboundedly
-        return args.now or time.strftime("%Y-%m-%dT%H:%M:%S")
+        # process start would freeze retention and grow sinks unboundedly.
+        # UTC, as the chunk keys it is compared with: a local clock would
+        # shift every cutoff by the driver's offset
+        return args.now or time.strftime("%Y-%m-%dT%H:%M:%S", time.gmtime())
 
     if args.query:
         if not (args.metric and args.start and args.end):

@@ -51,7 +51,7 @@ def encode_blocks(points: DataFrame, chunk: str = "1 hour") -> DataFrame:
     amortizes it and is the shape that holds at 10^12 docs, where a
     partition carries many complete blocks.)
     """
-    trunc = {"1 hour": "hour", "1 day": "day", "1 minute": "minute"}[chunk]
+    trunc = {"1 hour": "hour", "1 day": "day"}[chunk]
     chunked = points.select(
         "bucket",
         "metric",

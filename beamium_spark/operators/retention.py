@@ -26,8 +26,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-#: the ``chunk_key`` format: one partition per UTC hour
-KEY_FORMAT = "%Y-%m-%d-%H"
+from beamium_spark.sources.tables import KEY_FORMAT
 
 
 def ttl_cutoff_key(now_ts: str, ttl_hours: float) -> str:

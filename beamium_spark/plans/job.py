@@ -43,7 +43,7 @@ from pyspark.sql import types as T
 
 from beamium_spark.operators.blocks import encode_blocks
 from beamium_spark.operators.extract import extract_points
-from beamium_spark.operators.retention import KEY_FORMAT, size_cap_evict, ttl_evict
+from beamium_spark.operators.retention import size_cap_evict, ttl_evict
 from beamium_spark.operators.rollup import (
     day_alert_episodes,
     rollup_cascade,
@@ -60,7 +60,7 @@ from beamium_spark.plans.checkpoint import (
     new_run_id,
     utc_lit,
 )
-from beamium_spark.sources.tables import ParquetTierStore
+from beamium_spark.sources.tables import KEY_FORMAT, ParquetTierStore
 
 #: the pages source schema. Declared rather than inferred so ``warc_ts``
 #: reads as TIMESTAMP whatever the session's NTZ inference says: parquet

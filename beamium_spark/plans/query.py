@@ -53,6 +53,7 @@ from beamium_spark.operators.rollup import (
     window_seconds,
     window_start,
 )
+from beamium_spark.sources.tables import KEY_FORMAT
 
 _TIER_SECONDS = (("rollup_1d", 86400), ("rollup_1h", 3600), ("rollup_1m", 60))
 
@@ -140,7 +141,7 @@ def _read_range(
     tables without a row timestamp, such as the block store)."""
     df = store.read(table)
     if "chunk_key" in df.columns:
-        lo, hi = (t.strftime("%Y-%m-%d-%H") for t in (start, end))
+        lo, hi = (t.strftime(KEY_FORMAT) for t in (start, end))
         df = df.filter(F.col("chunk_key").between(lo, hi))
     if ts_col is not None:
         df = _in_range(df, start, end, ts_col)
@@ -156,8 +157,10 @@ def _blocks_points(
 ) -> DataFrame:
     """Chunk-pruned decode of the raw-fidelity block store to typed points
     — the shared source of the non-decomposable read paths. metric/bucket
-    prune BEFORE decode: clustered sorted runs put file/row-group stats on
-    (bucket, metric), so unmatched blocks never reach the Arrow boundary."""
+    filter BEFORE decode, so unmatched blocks never reach the Arrow
+    boundary. The ``metric`` regex is not pushed to parquet; the
+    ``bucket`` equality is, so parquet can skip a row group that holds
+    no row of that bucket."""
     if not store.exists(blocks_table):
         raise ValueError(
             f"raw-points read needs the block store "

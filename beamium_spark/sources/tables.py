@@ -27,9 +27,12 @@ plain parquet directories:
   are written ``.<name>.tmp`` then renamed, beamium's atomic mark
   (src/scraper.rs:249-265);
 - every parquet file the store writes has the same layout under any
-  session (``_write``): zstd pages, and no min/max statistics on the
-  opaque block blobs. Files of another codec read as they are and are
-  re-encoded when a replay or compaction rewrites their partition.
+  session (``_write``): zstd pages, no min/max statistics on the opaque
+  block blobs, dictionaries only on columns whose values repeat, and no
+  ``chunk_start`` column in a ``chunk_key`` partition's files — a read
+  derives it from the key (``read``). Files of an older layout read as
+  they are and are re-encoded when a replay or compaction rewrites
+  their partition.
 
 Every maintenance path (listing, TTL unlink, rewrite swap, compaction
 file counts) goes through the **Hadoop FileSystem API** resolved from
@@ -53,6 +56,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+#: the ``chunk_key`` partition value, the chunk's hour in the store's UTC
+#: zone: ``KEY_PATTERN`` for Spark's ``date_format``/``to_timestamp``,
+#: ``KEY_FORMAT`` for Python's ``strftime``/``strptime``
+KEY_PATTERN = "yyyy-MM-dd-HH"
+KEY_FORMAT = "%Y-%m-%d-%H"
 
 
 class ParquetTierStore:
@@ -186,13 +195,19 @@ class ParquetTierStore:
     #: the store's parquet layout, as writer options so that no session
     #: conf changes a file's bytes. ``ts_block``/``val_block`` are opaque
     #: Gorilla blobs no reader prunes on: their min/max would copy up to
-    #: two blobs into every footer. ``bucket`` and ``metric`` keep their
-    #: statistics, which the clustered writes exist to make selective
-    #: (``window_start`` is INT96, for which parquet keeps none).
+    #: two blobs into every footer. The double aggregates and the blobs
+    #: almost never repeat a value, so a dictionary page would only add a
+    #: second copy of each; the keys (``bucket``, ``metric``,
+    #: ``window_start``) and the small counters (``cnt``, ``n_points``,
+    #: ``codec``) repeat and keep theirs. Only ``bucket`` and ``metric``
+    #: have statistics a read can prune on (``window_start`` is INT96,
+    #: for which parquet keeps none).
     WRITE_OPTIONS = {
         "compression": "zstd",
         "parquet.column.statistics.enabled#ts_block": "false",
         "parquet.column.statistics.enabled#val_block": "false",
+        **{f"parquet.enable.dictionary#{c}": "false" for c in (
+            "sum_value", "min_value", "max_value", "ts_block", "val_block")},
     }
 
     def _write(
@@ -205,7 +220,10 @@ class ParquetTierStore:
         """The one parquet write of this store, files capped at
         ``max_records_per_file`` rows. A partitioned overwrite is dynamic,
         set on the writer: a host session's default STATIC mode would
-        replace the whole table with ``df``'s partitions."""
+        replace the whole table with ``df``'s partitions. A ``chunk_key``
+        partition's files hold no ``chunk_start``."""
+        if partition_col == "chunk_key":
+            df = df.drop("chunk_start")  # the key holds it (``read``)
         w = df.write.mode(mode).options(**self.WRITE_OPTIONS).option(
             "maxRecordsPerFile", self.max_records_per_file
         )
@@ -227,16 +245,46 @@ class ParquetTierStore:
         )
 
     def read(self, table: str) -> DataFrame:
+        """``table``'s rows. A ``chunk_key``-partitioned table gets its
+        ``chunk_start`` from the key, as a ``TimestampType`` (the session
+        zone is UTC), placed before ``chunk_key``: every writer's
+        ``chunk_start`` is its chunk's hour or coarser, so the key holds
+        it exactly. A ``chunk_start`` that files of an older layout carry
+        is not read."""
         schema = self._schemas.get(table)
         if schema is None:
             df = self.spark.read.parquet(self.path(table))
+            if "chunk_key" in df.columns:
+                df = df.drop("chunk_start")
             self._schemas[table] = df.schema
+        else:
+            df = self.spark.read.schema(schema).parquet(self.path(table))
+        if "chunk_key" not in df.columns:
             return df
-        return self.spark.read.schema(schema).parquet(self.path(table))
+        # the explicit type: ``to_timestamp`` alone follows the session's
+        # spark.sql.timestampType, which may be TIMESTAMP_NTZ
+        start = F.to_timestamp("chunk_key", KEY_PATTERN).cast(T.TimestampType())
+        return df.select(
+            *[c for c in df.columns if c != "chunk_key"],
+            start.alias("chunk_start"),
+            "chunk_key",
+        )
 
     #: default clustering for tier-shaped tables — any subset present in
-    #: the frame is used, in this order
-    SORT_COLS = ("bucket", "metric", "window_start")
+    #: the frame is used, in this order. Series first (a series is named
+    #: class first, ``class{labels}``): each series' values lie side by
+    #: side for the page encoder, about 5% fewer bytes than bucket-first
+    #: on the benchmark's ``dashboard`` store.
+    SORT_COLS = ("metric", "bucket", "window_start")
+
+    def _clustered(self, df: DataFrame, sort_cols=SORT_COLS) -> DataFrame:
+        """``df`` hash-partitioned on ``chunk_key`` and sorted within each
+        task by (chunk_key, *sort_cols∩columns); unchanged when no sort
+        column is present."""
+        cluster = [c for c in (sort_cols or ()) if c in df.columns]
+        if not cluster:
+            return df
+        return df.repartition("chunk_key").sortWithinPartitions("chunk_key", *cluster)
 
     def write_chunks(
         self,
@@ -255,27 +303,34 @@ class ParquetTierStore:
         exchange on chunk_key sends each chunk to exactly one writer
         task, whose within-task sort makes its files consecutive slices
         of one sorted run — disjoint even when ``maxRecordsPerFile``
-        splits the chunk. File- and row-group-level min/max stats then
-        prune reads filtered on bucket/metric. Time pruning comes from the
-        ``chunk_key`` partitions alone: Spark writes ``window_start`` as
-        INT96, which parquet keeps no statistics for. The one
-        exchange runs its child once (no sampling pass) and AQE sizes its
-        reducers by the data. Leading the sort with chunk_key also
-        satisfies the partitioned writer's required ordering, so Spark
-        adds no sort of its own. ``sort_cols=None`` disables both
-        (append-shaped tables). A row counter goes on the caller's frame
-        (``df.observe``): nothing below the exchange runs twice."""
-        out = df.withColumn("chunk_key", F.date_format(chunk_col, "yyyy-MM-dd-HH"))
-        cluster = [c for c in (sort_cols or ()) if c in out.columns]
-        if cluster:
-            out = out.repartition("chunk_key").sortWithinPartitions(
-                "chunk_key", *cluster
-            )
+        splits the chunk. The run is series-first (``SORT_COLS``), which
+        puts each series' values side by side for the page encoder. An
+        hour file at the benchmark's sizes is one row group, so no read
+        prunes on statistics there; a chunk large enough to span several
+        files or row groups would let the sorted ``metric`` min/max skip
+        them, once a read pushes a predicate on it. Time pruning comes from the ``chunk_key`` partitions alone: Spark
+        writes ``window_start`` as INT96, which parquet keeps no
+        statistics for. The one exchange runs its child once (no
+        sampling pass) and AQE sizes its reducers by the data. Leading
+        the sort with chunk_key also satisfies the partitioned writer's
+        required ordering, so Spark adds no sort of its own.
+        ``sort_cols=None`` disables both (append-shaped tables). A row
+        counter goes on the caller's frame (``df.observe``): nothing
+        below the exchange runs twice.
+
+        ``chunk_col`` holds the chunk's hour or a coarser start (every
+        writer's frame does; ``encode_blocks`` chunks by hour or day): the
+        files keep only the key, and ``read`` derives ``chunk_start``
+        from it."""
+        out = self._clustered(
+            df.withColumn("chunk_key", F.date_format(chunk_col, KEY_PATTERN)),
+            sort_cols,
+        )
         self._write(out, self.path(table), partition_col="chunk_key")
         # what a read infers: the data columns, then the partition column
         self._schemas[table] = T.StructType(
             [T.StructField(f.name, f.dataType, True, f.metadata)
-             for f in out.schema if f.name != "chunk_key"]
+             for f in out.schema if f.name not in ("chunk_key", "chunk_start")]
             + [T.StructField("chunk_key", T.StringType(), True)]
         )
 
@@ -391,8 +446,9 @@ class ParquetTierStore:
         same dynamic partition overwrite as data writes, so a killed
         compaction leaves either the old or the new file set, never a
         mix. The rewrite re-encodes each partition in the store's layout
-        (``WRITE_OPTIONS``) whatever codec its files had, so
-        ``compact_chunks(table)`` migrates a whole table at once.
+        (``WRITE_OPTIONS``, ``SORT_COLS``, no ``chunk_start``) whatever
+        layout its files had, so ``compact_chunks(table)`` migrates a
+        whole table at once.
         Returns {files_before, files_after, chunks}. (Iceberg:
         ``rewrite_data_files`` is the engine-side equivalent.)"""
         root = self.path(table)
@@ -410,11 +466,14 @@ class ParquetTierStore:
         df = self.read(table)
         if keys is not None:
             df = df.filter(F.col("chunk_key").isin(list(keys)))
-        # hash-colocate each chunk's rows, then one overwrite per partition;
-        # maxRecordsPerFile re-splits oversized chunks deterministically.
-        # Materialize BEFORE writing — the rewrite targets the directory
-        # the plan reads from (same contract as delete_where).
-        df = df.repartition("chunk_key").cache()
+        # hash-colocate each chunk's rows in write_chunks' order (Spark
+        # collapses _clustered's repartition on the same key into this
+        # one, which a table with no sort column still needs), then one
+        # overwrite per partition; maxRecordsPerFile re-splits oversized
+        # chunks deterministically. Materialize BEFORE writing — the
+        # rewrite targets the directory the plan reads from (same
+        # contract as delete_where).
+        df = self._clustered(df.repartition("chunk_key")).cache()
         df.count()
         try:
             self._write(df, root, partition_col="chunk_key")
@@ -510,7 +569,7 @@ class IcebergTierStore:
         return self.spark.read.format("iceberg").load(self._t(table))
 
     def write_chunks(self, df: DataFrame, table: str, chunk_col: str = "chunk_start") -> None:  # pragma: no cover
-        out = df.withColumn("chunk_key", F.date_format(chunk_col, "yyyy-MM-dd-HH"))
+        out = df.withColumn("chunk_key", F.date_format(chunk_col, KEY_PATTERN))
         w = out.writeTo(self._t(table)).partitionedBy(F.col("chunk_key"))
         if self.exists(table):
             out.writeTo(self._t(table)).overwritePartitions()

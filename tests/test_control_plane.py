@@ -195,11 +195,10 @@ def test_fractional_ttl_evicts_exactly(spark, full_state, tmp_path):
     store = ParquetTierStore(spark, state)
     now, ttl = "2025-01-02T10:00:00", 2.5
     cutoff = dt.datetime(2025, 1, 2, 7, 30)
+    ref_store = ParquetTierStore(spark, ref)
     for table in TTL_TABLES:
-        want = spark.read.parquet(f"{ref}/{table}").filter(
-            F.col("chunk_start") >= F.lit(cutoff)
-        )
-        n_all = spark.read.parquet(f"{ref}/{table}").count()
+        want = ref_store.read(table).filter(F.col("chunk_start") >= F.lit(cutoff))
+        n_all = ref_store.read(table).count()
         out = ttl_evict(store, table, now, ttl)
         assert out["expired_rows"] == n_all - want.count(), table
         got = store.read(table) if store.exists(table) else None

@@ -128,6 +128,38 @@ def test_cli_daemon_retention_clock_advances(spark, tmp_path, capsys, monkeypatc
     assert len(calls) == 3
 
 
+def test_cli_retention_clock_is_utc(spark, tmp_path, monkeypatch):
+    """The retention clock is UTC, as the chunk keys are: on a driver 14
+    hours east of UTC, a sample 47 hours old stays under a 48 h TTL (a
+    local clock would put the cutoff 34 hours back and evict it)."""
+    import time as time_mod
+
+    from beamium_spark.sources.tables import ParquetTierStore
+
+    d = tmp_path / "gts"
+    d.mkdir()
+    ts_us = (int(time_mod.time()) - 47 * 3600) * 10**6
+    (d / "a.metrics").write_text(f"{ts_us}// node_cpu{{h=a}} 1.0\n")
+    cfg = tmp_path / "engine.json"
+    cfg.write_text(json.dumps({
+        "scrapers": {"nodes": {"format": "sensision"}},
+        "sinks": {"warp": {"table": "warp", "selector": "node_.*", "ttl": "48h"}},
+    }))
+    state = tmp_path / "state"
+    with monkeypatch.context() as m:
+        m.setenv("TZ", "Pacific/Kiritimati")
+        time_mod.tzset()
+        try:
+            rc = main(["--scrape", "--config", str(cfg), "--state", str(state),
+                       "--source", f"nodes={d}"])
+        finally:
+            m.undo()
+            time_mod.tzset()
+    assert rc == 0
+    store = ParquetTierStore(spark, str(state))
+    assert store.exists("warp") and store.read("warp").count() == 1
+
+
 def test_cli_daemon_scrape_time_is_taken_per_pass(spark, tmp_path, monkeypatch):
     """Each daemon pass takes the scrape time anew: a file that arrives
     before the second pass, two hours on, stamps its untimed sample with

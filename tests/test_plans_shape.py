@@ -256,11 +256,11 @@ def test_top_urls_salting_is_lossless(spark, pages):
 
 
 def test_write_chunks_clusters_files_into_disjoint_runs(spark, tmp_path):
-    """Chunk writes sort rows by (chunk_key, bucket, metric, window_start)
-    so each emitted parquet file is a disjoint sorted run — file-level
-    min/max stats then prune bucket/metric-filtered reads. Verified from
-    the parquet footers: per chunk partition, file key-ranges must not
-    overlap."""
+    """Chunk writes sort rows series-first, by (chunk_key, metric, bucket,
+    window_start), so each emitted parquet file is a disjoint sorted run
+    that keeps each series' values together for the page encoder.
+    Verified from the parquet footers: per chunk partition, file
+    key-ranges must not overlap."""
     import datetime as dt
     import glob
     import os
@@ -291,13 +291,13 @@ def test_write_chunks_clusters_files_into_disjoint_runs(spark, tmp_path):
     part = os.path.join(str(tmp_path / "store"), "t1m", "chunk_key=2025-01-01-00")
     files = sorted(glob.glob(os.path.join(part, "*.parquet")))
     assert len(files) >= 3  # maxRecordsPerFile forced a split
-    # composite (bucket, metric, window_start) ranges from actual first/
+    # composite (metric, bucket, window_start) ranges from actual first/
     # last rows (column-wise parquet min/max can't express a composite
     # ordering): files must be globally disjoint sorted runs
     runs = []
     for f in files:
-        t = pq.read_table(f, columns=["bucket", "metric", "window_start"])
-        rows = list(zip(*[t.column(c).to_pylist() for c in ("bucket", "metric", "window_start")]))
+        t = pq.read_table(f, columns=["metric", "bucket", "window_start"])
+        rows = list(zip(*[t.column(c).to_pylist() for c in ("metric", "bucket", "window_start")]))
         assert rows == sorted(rows), f"{f} is not internally sorted"
         runs.append((rows[0], rows[-1]))
     runs.sort()
